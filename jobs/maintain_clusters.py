@@ -445,6 +445,8 @@ def _locked_main(args) -> int:
             pairs = pairs.unionByName(
                 _sa_pairs(cfg, anch, old_anch)).distinct()
         pairs = pairs.localCheckpoint()  # endpoint broadcast + final join
+        # ``edges`` stays lazy: connected_components (bootstrap) and
+        # apply_batch (cluster_delta) each materialize it once
         edges = _screened_edges(
             pairs, sigs, old_sigs, fps, old_fps, est, cfg, lcs=has_sa)
         if has_audio:

@@ -31,8 +31,9 @@ launching a second join-plus-count job per iteration.
 
 Checkpoint mode: ``localCheckpoint`` (default) stores blocks on executors
 -- cheapest, but a lost executor on a real cluster loses blocks and fails
-the job.  ``cfg.cc_reliable_checkpoint=True`` switches every round to
-reliable ``checkpoint()`` into the SparkContext checkpoint dir (set it to
+the job.  ``cfg.cc_reliable_checkpoint=True`` switches every round (and
+:func:`cluster_delta`'s two input materializations) to reliable
+``checkpoint()`` into the SparkContext checkpoint dir (set it to
 HDFS/S3 on a cluster; a temp dir is provisioned automatically in local
 mode).  Execution-only knob: results are identical (pinned by test).
 """
@@ -63,15 +64,23 @@ def connected_components(
     """(clip_id, cluster_id) with cluster_id = min clip_id in component.
 
     ``edges``: (id1, id2) verified dup pairs; ``nodes``: (clip_id) the full
-    clip universe (singletons label themselves).
+    clip universe (singletons label themselves).  ``edges`` may be a lazy
+    plan (the maintenance job's bootstrap and ``ClusterStore.retract``
+    pass UDF-screened edge frames): it is read exactly once, by the
+    checkpoint of the symmetric edge table below.
     """
     from pyspark.sql import Observation
 
+    # both directions of every edge from ONE pass over ``edges``: a union
+    # of two projections would evaluate a lazy input twice
     sym = _checkpointer(
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
+        edges.select(
+            F.explode(F.array(
+                F.struct(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+                F.struct(F.col("id2").alias("src"), F.col("id1").alias("dst")),
+            )).alias("_e")
         )
+        .select("_e.src", "_e.dst")
         .distinct(),
         cfg,
     )
@@ -170,8 +179,16 @@ def cluster_delta(
 
     Requirements: ``new_nodes`` is disjoint from ``prev`` ids (the intake
     store's per-batch dedup guarantees this), and every ``new_edges``
-    endpoint appears in ``prev`` or ``new_nodes``.
+    endpoint appears in ``prev`` or ``new_nodes``.  ``new_edges`` may be
+    lazy (the maintenance job passes its UDF-screened edge plan): it is
+    materialized once here, projected to (id1, id2), and so is the
+    contracted edge table after the label lookup -- both are
+    batch-scale, and every consumer (the endpoint set, the contraction,
+    CC, the returned frames' later actions) then reads the
+    materialization instead of re-running the screen or re-scanning
+    ``prev``.
     """
+    new_edges = _checkpointer(new_edges.select("id1", "id2"), cfg)
     eps = (
         new_edges.select(F.col("id1").alias("clip_id"))
         .unionByName(new_edges.select(F.col("id2").alias("clip_id")))
@@ -182,14 +199,15 @@ def cluster_delta(
     touched = prev.join(F.broadcast(eps), "clip_id")
     l1 = touched.select(F.col("clip_id").alias("id1"), F.col("cluster_id").alias("_l1"))
     l2 = touched.select(F.col("clip_id").alias("id2"), F.col("cluster_id").alias("_l2"))
-    contracted = (
+    contracted = _checkpointer(
         new_edges.join(l1, "id1", "left")
         .join(l2, "id2", "left")
         .select(
             F.coalesce("_l1", F.col("id1")).alias("id1"),
             F.coalesce("_l2", F.col("id2")).alias("id2"),
         )
-        .where(F.col("id1") != F.col("id2"))
+        .where(F.col("id1") != F.col("id2")),
+        cfg,
     )
     cnodes = (
         contracted.select(F.col("id1").alias("clip_id"))
@@ -324,7 +342,9 @@ class ClusterStore:
         WITHOUT touching ``base``: compute the contracted-graph delta,
         compose it into the standing mapping, and keep ``delta`` current.
         localCheckpoint() pins the tiny state tables so the next batch's
-        view does not re-derive this batch's CC."""
+        view does not re-derive this batch's CC.  ``new_edges`` may be a
+        lazy plan: :func:`cluster_delta` materializes it once, so the
+        mapping, delta and CC actions here never re-run its screen."""
         mapping_k, new_assign = cluster_delta(
             self.current(), new_edges, new_nodes, cfg
         )

@@ -19,6 +19,14 @@ sets are BATCH-scale and broadcast; the corpus-scale stores are only
 ever scanned and semi-restricted map-side (broadcast endpoint sets),
 never shuffled wholesale.  See each docstring for the per-operator
 shape.
+
+Materialization contract: callers materialize the candidate PAIR frames
+(each feeds an endpoint broadcast and a verify join); the verified EDGE
+frames these functions return stay lazy and are handed straight to the
+cluster operators, which read them exactly once
+(``connected_components`` checkpoints its symmetric edge table,
+``cluster_delta`` checkpoints its edge input), so the Python screens
+run once per pair however many actions follow.
 """
 
 from __future__ import annotations
@@ -257,7 +265,12 @@ def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
     scanned, never shuffled (the same shape cluster_delta uses for its
     label lookup). ``pairs`` must be materialized by the caller
     (localCheckpoint) since it feeds both the endpoint broadcast and
-    the final join.
+    the final join.  The returned edges are a lazy plan the caller need
+    not materialize: the cluster operators read it once (module
+    docstring).  With ``lcs=True`` the joined pair/feature rows feed
+    both the cheap-pass and the LCS branch, so they are materialized
+    here, once, instead of running the 4-way join and the store
+    semi-joins per branch.
     """
     from pyspark.sql import functions as F
 
@@ -297,6 +310,8 @@ def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
         F.col("text_key").alias("id2"), F.col("fingerprint").alias("_f2"))
     joined = pairs.join(s1, "id1").join(s2, "id2").join(f1, "id1").join(
         f2, "id2")
+    if lcs:  # read by both union branches below
+        joined = joined.localCheckpoint()
     cheap_ok = (
         (est(F.col("_s1"), F.col("_s2")) >= cfg.jaccard_threshold)
         | (hamming_distance(F.col("_f1"), F.col("_f2")) <= cfg.hamming_t)

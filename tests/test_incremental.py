@@ -466,3 +466,83 @@ def test_maybe_fold_counts_tombstones(spark):
     assert store.maybe_fold(1) is True     # 2 tombstones > 1
     assert store.gone is None and store.delta is None
     assert _assign(store.current()) == {"a": "a", "c": "c"}
+
+
+def _counted_edges(spark, rows):
+    """An (id1, id2) edge frame whose every row evaluation runs a Python
+    UDF that counts into an accumulator -- the shape of the maintenance
+    job's lazy, UDF-screened edge plan, where each re-read re-runs the
+    Python screen over every pair."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    f = F.udf(tick, "string").asNondeterministic()
+    edges = spark.createDataFrame(rows, "id1 string, id2 string").select(
+        f("id1").alias("id1"), "id2")
+    return edges, acc
+
+
+@pytest.mark.parametrize(
+    "path", ["apply_batch", "merge_clusters", "connected_components",
+             "retract"])
+def test_lazy_edges_evaluated_once_per_row(spark, path):
+    """Each cluster path reads a lazy edge input exactly once -- through
+    its own actions and every later read of its result -- and still
+    equals full CC."""
+    old_e = [("a", "b"), ("c", "d"), ("x", "y")]
+    old_n = ["a", "b", "c", "d", "x", "y", "z"]
+    # new-new, new-old and old-old (merges two standing clusters)
+    new_e = [("n1", "n2"), ("n2", "a"), ("b", "c"), ("n3", "x")]
+    new_n = ["n1", "n2", "n3", "n4"]
+    truth = old_e + new_e
+    nodes = old_n + new_n
+
+    def df_e(rows):
+        return spark.createDataFrame(rows, "id1 string, id2 string")
+
+    full = _assign(connected_components(df_e(truth), _df_n(spark, nodes),
+                                        CFG))
+    if path == "connected_components":
+        edges, acc = _counted_edges(spark, truth)
+        got = _assign(connected_components(edges, _df_n(spark, nodes), CFG))
+        n_rows = len(truth)
+    elif path == "retract":
+        store = ClusterStore(connected_components(
+            df_e(truth), _df_n(spark, nodes), CFG))
+        truth_fn = _truth_edges_fn(spark, truth)
+        seen = []
+
+        def edges_fn(survivors):
+            rows = [(r.id1, r.id2) for r in truth_fn(survivors).collect()]
+            edges, acc = _counted_edges(spark, rows)
+            seen.append((len(rows), acc))
+            return edges
+
+        store.retract(_df_n(spark, ["b"]), edges_fn, CFG)
+        got = _assign(store.current())
+        store.fold()
+        assert _assign(store.current()) == got
+        (n_rows, acc), = seen
+        surv = [n for n in nodes if n != "b"]
+        full = _assign(connected_components(
+            df_e([(a, b) for a, b in truth if "b" not in (a, b)]),
+            _df_n(spark, surv), CFG))
+    else:
+        prev = connected_components(df_e(old_e), _df_n(spark, old_n), CFG)
+        edges, acc = _counted_edges(spark, new_e)
+        if path == "apply_batch":
+            store = ClusterStore(prev)
+            store.apply_batch(edges, _df_n(spark, new_n), CFG)
+            got = _assign(store.current())
+            store.fold()
+            assert _assign(store.current()) == got
+        else:
+            merged = merge_clusters(prev, edges, _df_n(spark, new_n), CFG)
+            got = _assign(merged)
+            assert _assign(merged) == got
+        n_rows = len(new_e)
+    assert got == full
+    assert acc.value == n_rows
