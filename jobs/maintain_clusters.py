@@ -24,12 +24,15 @@ the incremental operators:
   written before the anchor table existed run without the substring
   term (candidacy without the LCS verify would create false edges, so
   the two ship together).  The AUDIO axis adds two
-  text-key edge classes (`_audio_text_edges`): byte-identical payloads
+  text-key edge classes (`audio_text_edges`): byte-identical payloads
   shared across transcripts (star edges over the keyed store -- the
   incremental counterpart of the batch pipeline's audio content
   classes) and energy-LSH near-dup payloads (head-trimmed / noisy
   re-masters under different transcripts, which no text detector can
   pair).  Stores written before the energy table existed run text-only.
+  All of this is `plans.maintenance.verified_edges`, which the
+  retraction recompute and the driver-channel certification query
+  call too.
   Combining is free: the state manifest commits once per run either
   way (so per-batch looping adds no resumability), and CC edge folding
   is order-independent, while a per-batch loop would scan the prior
@@ -233,11 +236,13 @@ def _locked_main(args) -> int:
         ClusterStore,
         connected_components,
     )
-    from locality_sensitive_hashing_spark.operators.minhash import (
-        estimated_jaccard_udf,
+    from locality_sensitive_hashing_spark.plans.maintenance import (
+        survivor_edges_builder,
+        verified_edges,
     )
     from locality_sensitive_hashing_spark.session import get_spark
     from locality_sensitive_hashing_spark.streaming.incremental import (
+        STORE_TABLES,
         batch_paths,
         committed_batch_ids,
         committed_retraction_ids,
@@ -289,17 +294,12 @@ def _locked_main(args) -> int:
         print(json.dumps({"status": "up-to-date", **state}))
         return 0
 
-    def _minus_t(df):
-        return (df.join(F.broadcast(tomb_t), "text_key", "left_anti")
-                if tomb_t is not None else df)
+    tomb = {"text_key": tomb_t, "audio_key": tomb_a, "clip_id": retracted}
+    revived = {"text_key": revived_t, "audio_key": revived_a}
 
-    def _minus_a(df):
-        return (df.join(F.broadcast(tomb_a), "audio_key", "left_anti")
-                if tomb_a is not None else df)
-
-    def _minus_clips(df):
-        return (df.join(F.broadcast(retracted), "clip_id", "left_anti")
-                if retracted is not None else df)
+    def _minus(df, key):
+        return (df.join(F.broadcast(tomb[key]), key, "left_anti")
+                if tomb[key] is not None else df)
 
     def _read(table, ids):
         r = spark.read
@@ -322,14 +322,20 @@ def _locked_main(args) -> int:
     else:
         store = _load_store(spark, args.workdir, state)
 
-    est = estimated_jaccard_udf()
-    # audio axis is present iff the intake store materialized the
-    # energy table (stores written before it existed stay readable:
-    # the job simply runs text-only against them); same presence
-    # contract for the substring axis' anchor table
-    has_audio = os.path.isdir(os.path.join(args.store, "energy"))
-    has_sa = os.path.isdir(os.path.join(args.store, "anchors"))
+    # the text axes always run; the substring and audio axes run iff the
+    # intake store materialized their anchor / energy table (stores
+    # written before those existed stay readable: the job simply runs
+    # without them) -- verified_edges switches an axis on per present
+    # table.  Each table is keyed (and tombstoned) by text_key, except
+    # the per-payload energy table (audio_key).
+    tables = [t for t in STORE_TABLES if t != "keyed"
+              and os.path.isdir(os.path.join(args.store, t))]
+    key_of = {t: "audio_key" if t == "energy" else "text_key"
+              for t in tables}
+    has_audio = "energy" in tables
     all_ids = sorted(done | set(todo))
+    keyed_all = (_minus(_read("keyed", all_ids), "clip_id")
+                 if has_audio else None)
 
     # -- 1. retractions FIRST (on the pre-batch graph, where affected
     # clusters are smallest): remove dead nodes and recompute every
@@ -339,17 +345,9 @@ def _locked_main(args) -> int:
     # retractions' surviving text_keys, because a clip retraction can
     # sever an audio star edge between two text_keys that both survive.
     if store is not None and retr_todo:
-        sigs_all = _minus_t(_read("signatures", all_ids))
-        fps_all = _minus_t(_read("fingerprints", all_ids))
-        keyed_all = en_all = anch_all = None
-        if has_audio:
-            keyed_all = _minus_clips(_read("keyed", all_ids))
-            en_all = _minus_a(_read("energy", all_ids))
-        if has_sa:
-            anch_all = _minus_t(_read("anchors", all_ids))
-        edges_fn = _survivor_edges_builder(
-            cfg, est, sigs_all, fps_all,
-            keyed=keyed_all, energy=en_all, anchors=anch_all)
+        edges_fn = survivor_edges_builder(
+            cfg, {t: _minus(_read(t, all_ids), key_of[t]) for t in tables},
+            keyed=keyed_all)
         new_retr = spark.read.parquet(*[
             os.path.join(args.store, "retractions", f"r{i}")
             for i in retr_todo
@@ -375,94 +373,53 @@ def _locked_main(args) -> int:
     # side to the NEW side, so incremental blocking re-pairs them
     # against the whole corpus and apply_batch re-adds them as nodes --
     # revival is just an intake batch whose features already exist.
+    # Bootstrap (no standing assignment) has no old side: the pending
+    # set clusters from scratch against itself and becomes base v1.
     if todo or has_revival:
         base_ids = sorted(done)
-        sigs = _minus_t(_read("signatures", todo) if todo
-                        else _read("signatures", base_ids).limit(0))
-        fps = _minus_t(_read("fingerprints", todo) if todo
-                       else _read("fingerprints", base_ids).limit(0))
-        if has_sa:
-            anch = _minus_t(_read("anchors", todo) if todo
-                            else _read("anchors", base_ids).limit(0))
-        if has_audio:
-            en = _minus_a(_read("energy", todo) if todo
-                          else _read("energy", base_ids).limit(0))
-            keyed_new = _minus_clips(_read("keyed", todo) if todo
-                                     else _read("keyed", base_ids).limit(0))
-            keyed_all = _minus_clips(_read("keyed", all_ids))
-        if store is None:
-            old_sigs = sigs.limit(0)
-            old_fps = fps.limit(0)
-            old_anch = anch.limit(0) if has_sa else None
-            old_en = en.limit(0) if has_audio else None
-        else:
-            old_sigs = _minus_t(_read("signatures", base_ids))
-            old_fps = _minus_t(_read("fingerprints", base_ids))
-            old_anch = (_minus_t(_read("anchors", base_ids))
-                        if has_sa else None)
-            old_en = _minus_a(_read("energy", base_ids)) if has_audio else None
-        if has_audio:
-            # mixed-era store: pending batches written by the combined
-            # kernel while committed batches predate it (or vice versa).
-            # Align both frames on the gain columns -- backfilled null
-            # rows fall out at the gain eligibility floor -- so the
-            # revival unions and every gain-side reference below are
-            # schema-safe, and the gain axis keeps running for the
-            # new-kernel content instead of crashing or being disabled
-            # store-wide (ADVICE round 5, medium).
-            use_gain = "codes" in en.columns or "codes" in old_en.columns
-            if use_gain:
-                en = _with_gain_cols(en)
-                old_en = _with_gain_cols(old_en)
-        if has_revival:
-            sigs = sigs.unionByName(
-                old_sigs.join(F.broadcast(revived_t), "text_key", "left_semi"))
-            old_sigs = old_sigs.join(
-                F.broadcast(revived_t), "text_key", "left_anti")
-            fps = fps.unionByName(
-                old_fps.join(F.broadcast(revived_t), "text_key", "left_semi"))
-            old_fps = old_fps.join(
-                F.broadcast(revived_t), "text_key", "left_anti")
-            if has_sa:
-                anch = anch.unionByName(old_anch.join(
-                    F.broadcast(revived_t), "text_key", "left_semi"))
-                old_anch = old_anch.join(
-                    F.broadcast(revived_t), "text_key", "left_anti")
+
+        def _pending(t, key):
+            return _minus(_read(t, todo) if todo
+                          else _read(t, base_ids).limit(0), key)
+
+        new = {t: _pending(t, key_of[t]) for t in tables}
+        old = None
+        keyed_new = None
+        if store is not None:
+            old = {t: _minus(_read(t, base_ids), key_of[t]) for t in tables}
+            if has_audio and ("codes" in new["energy"].columns
+                              or "codes" in old["energy"].columns):
+                # mixed-era store: pending batches written by the
+                # combined kernel while committed batches predate it (or
+                # vice versa). Align both frames on the gain columns --
+                # backfilled null rows fall out at the gain eligibility
+                # floor -- so the revival unions and every gain-side
+                # reference are schema-safe, and the gain axis keeps
+                # running for the new-kernel content instead of crashing
+                # or being disabled store-wide (ADVICE round 5, medium).
+                new["energy"] = _with_gain_cols(new["energy"])
+                old["energy"] = _with_gain_cols(old["energy"])
+            if has_revival:
+                for t in tables:
+                    rev = F.broadcast(revived[key_of[t]])
+                    new[t] = new[t].unionByName(
+                        old[t].join(rev, key_of[t], "left_semi"))
+                    old[t] = old[t].join(rev, key_of[t], "left_anti")
             if has_audio:
-                en = en.unionByName(old_en.join(
-                    F.broadcast(revived_a), "audio_key", "left_semi"))
-                old_en = old_en.join(
-                    F.broadcast(revived_a), "audio_key", "left_anti")
-                krev = keyed_all.join(
-                    F.broadcast(revived_a), "audio_key", "left_semi"
-                ).unionByName(keyed_all.join(
-                    F.broadcast(revived_t), "text_key", "left_semi"
-                )).distinct()
-                keyed_new = keyed_new.unionByName(krev).distinct()
-        new_nodes = sigs.select(F.col("text_key").alias("clip_id"))
-        pairs = _batch_pairs(cfg, sigs, old_sigs, fps, old_fps)
-        if has_sa:
-            pairs = pairs.unionByName(
-                _sa_pairs(cfg, anch, old_anch)).distinct()
-        pairs = pairs.localCheckpoint()  # endpoint broadcast + final join
+                keyed_new = _pending("keyed", "clip_id")
+                if has_revival:
+                    krev = keyed_all.join(
+                        F.broadcast(revived_a), "audio_key", "left_semi"
+                    ).unionByName(keyed_all.join(
+                        F.broadcast(revived_t), "text_key", "left_semi"
+                    )).distinct()
+                    keyed_new = keyed_new.unionByName(krev).distinct()
+        new_nodes = new["signatures"].select(
+            F.col("text_key").alias("clip_id"))
         # ``edges`` stays lazy: connected_components (bootstrap) and
         # apply_batch (cluster_delta) each materialize it once
-        edges = _screened_edges(
-            pairs, sigs, old_sigs, fps, old_fps, est, cfg, lcs=has_sa)
-        if has_audio:
-            apairs = _energy_pairs(cfg, en, old_en).localCheckpoint()
-            # gain axis iff ANY era of the store carries the combined
-            # kernel's codes (both frames were gain-column-aligned above;
-            # a fully pre-codes store runs energy-only)
-            gp = (_gain_pairs(cfg, en, old_en).localCheckpoint()
-                  if use_gain else None)
-            edges = edges.unionByName(_audio_text_edges(
-                apairs, en, old_en, keyed_all, keyed_new, cfg, gpairs=gp
-            )).distinct()
+        edges = verified_edges(cfg, new, old, keyed_all, keyed_new)
         if store is None:
-            # bootstrap: no standing assignment -- the pending set
-            # clusters from scratch (its own in-set pairs via the same
-            # blocking + screen) and becomes base v1
             base = connected_components(edges, new_nodes, cfg)
             store = ClusterStore(base.localCheckpoint())
             base_new = True
@@ -517,22 +474,6 @@ def _locked_main(args) -> int:
     n = read_current(spark, args.workdir).count()
     print(json.dumps({"status": "ok", "n_assigned": n, **new_state}))
     return 0
-
-
-# The candidate/screen/edge operators live in the package so the zip
-# (--py-files) carries them and the driver-channel certification query
-# (entry_queries.q_incremental_maintenance_clusters) exercises the SAME
-# code this job runs; the underscore aliases keep this module's public
-# surface (tests, A/B harnesses) unchanged.
-from locality_sensitive_hashing_spark.plans.maintenance import (  # noqa: E402
-    audio_text_edges as _audio_text_edges,
-    batch_pairs as _batch_pairs,
-    energy_pairs as _energy_pairs,
-    gain_pairs as _gain_pairs,
-    sa_pairs as _sa_pairs,
-    screened_edges as _screened_edges,
-    survivor_edges_builder as _survivor_edges_builder,
-)
 
 
 if __name__ == "__main__":

@@ -3615,7 +3615,7 @@ def q_audio_gain_eval_recall(spark, sf_dir):
 def q_incremental_audio_clusters(spark, sf_dir):
     """Incremental AUDIO-axis dedup == from-scratch audio clustering,
     hash-checked in the driver channel (the maintenance loop's audio
-    near-dup path, jobs/maintain_clusters._energy_pairs): base clips
+    near-dup path, plans.maintenance.energy_pairs): base clips
     (``...b``) are the committed corpus, the planted variants
     (``...t``/``...z``) the intake batch -- so EVERY planted near-dup
     pair crosses the batch boundary and must be found by the incremental
@@ -3679,7 +3679,7 @@ def q_incremental_audio_clusters(spark, sf_dir):
 def q_incremental_substring_clusters(spark, sf_dir):
     """Incremental SUBSTRING-axis dedup == from-scratch substring
     clustering, hash-checked in the driver channel (the maintenance
-    loop's third text detector, jobs/maintain_clusters._sa_pairs): the
+    loop's third text detector, plans.maintenance.sa_pairs): the
     corpus splits into a committed half and an intake batch; the
     committed half clusters from its own winnowing-anchor pairs verified
     by exact LCS >= sa_min_len, then the batch folds in via
@@ -3848,7 +3848,6 @@ def q_incremental_maintenance_clusters(spark, sf_dir):
         merge_clusters,
     )
     from locality_sensitive_hashing_spark.operators.minhash import (
-        estimated_jaccard_udf,
         shingles_udf,
         with_signatures,
     )
@@ -3857,14 +3856,7 @@ def q_incremental_maintenance_clusters(spark, sf_dir):
     from locality_sensitive_hashing_spark.operators.textgroup import (
         with_content_keys,
     )
-    from locality_sensitive_hashing_spark.plans.maintenance import (
-        audio_text_edges,
-        batch_pairs,
-        energy_pairs,
-        gain_pairs,
-        sa_pairs,
-        screened_edges,
-    )
+    from locality_sensitive_hashing_spark.plans.maintenance import verified_edges
 
     cfgu = dc_replace(CFG, bucket_cap=_NOCAP)
     clips = _maint_clips(spark, sf_dir)
@@ -3889,17 +3881,21 @@ def q_incremental_maintenance_clusters(spark, sf_dir):
     )
 
     def _feats(texts):
-        sigs = with_signatures(texts, cfgu, text_col="norm",
-                               id_col="text_key", pre_normalized=True)
-        fps = with_fingerprint(texts, text_col="norm", id_col="text_key")
-        anch = with_anchors(texts, cfgu, norm_col="norm", id_col="text_key")
-        return (sigs.localCheckpoint(), fps.localCheckpoint(),
-                anch.localCheckpoint())
+        return {
+            "signatures": with_signatures(
+                texts, cfgu, text_col="norm", id_col="text_key",
+                pre_normalized=True).localCheckpoint(),
+            "fingerprints": with_fingerprint(
+                texts, text_col="norm", id_col="text_key").localCheckpoint(),
+            "anchors": with_anchors(
+                texts, cfgu, norm_col="norm",
+                id_col="text_key").localCheckpoint(),
+        }
 
-    old_sigs, old_fps, old_anch = _feats(old_texts)
-    new_sigs, new_fps, new_anch = _feats(new_texts)
-    _aux_write(old_fps.unionByName(new_fps), sf_dir, "maint_fps")
-    _aux_write(old_anch.unionByName(new_anch), sf_dir, "maint_anchors")
+    old, new = _feats(old_texts), _feats(new_texts)
+    for t, name in (("fingerprints", "maint_fps"),
+                    ("anchors", "maint_anchors")):
+        _aux_write(old[t].unionByName(new[t]), sf_dir, name)
 
     # energy store: one row per distinct payload, same anti-join contract
     pay = clips.select(
@@ -3912,51 +3908,22 @@ def q_incremental_maintenance_clusters(spark, sf_dir):
         .join(old_pay.select("audio_key"), "audio_key", "left_anti")
     )
 
-    def _en(p):
-        # the combined intake-store kernel: energy features + gain codes
-        # in one decode (audio_lsh.with_store_audio_features)
-        return with_store_audio_features(
-            p, cfgu, id_col="audio_key"
-        ).localCheckpoint()
+    # the combined intake-store kernel: energy features + gain codes in
+    # one decode (audio_lsh.with_store_audio_features)
+    for side, p in ((old, old_pay), (new, new_pay)):
+        side["energy"] = with_store_audio_features(
+            p, cfgu, id_col="audio_key").localCheckpoint()
 
-    old_en, new_en = _en(old_pay), _en(new_pay)
-
-    est = estimated_jaccard_udf()
     # bootstrap: the committed half clusters from its own blocks (the
-    # job's store-is-empty path, jobs/maintain_clusters.py main())
-    pairs0 = (
-        batch_pairs(cfgu, old_sigs, old_sigs.limit(0), old_fps,
-                    old_fps.limit(0))
-        .unionByName(sa_pairs(cfgu, old_anch, old_anch.limit(0)))
-        .distinct().localCheckpoint()
-    )
-    edges0 = screened_edges(
-        pairs0, old_sigs, old_sigs, old_fps, old_fps, est, cfgu, lcs=True)
-    apairs0 = energy_pairs(cfgu, old_en, old_en.limit(0)).localCheckpoint()
-    gpairs0 = gain_pairs(cfgu, old_en, old_en.limit(0)).localCheckpoint()
-    edges0 = edges0.unionByName(audio_text_edges(
-        apairs0, old_en, old_en.limit(0), keyed_base, keyed_base, cfgu,
-        gpairs=gpairs0,
-    )).distinct()
+    # old=None shape the job's first run takes)
     prev = connected_components(
-        edges0, old_texts.select(F.col("text_key").alias("clip_id")), cfgu)
+        verified_edges(cfgu, old, keyed_all=keyed_base),
+        old_texts.select(F.col("text_key").alias("clip_id")), cfgu)
 
     # fold: the intake batch pairs only via blocks it touches, then
     # merge_clusters (contracted-graph CC) -- the job's incremental path
-    pairs1 = (
-        batch_pairs(cfgu, new_sigs, old_sigs, new_fps, old_fps)
-        .unionByName(sa_pairs(cfgu, new_anch, old_anch))
-        .distinct().localCheckpoint()
-    )
-    edges1 = screened_edges(
-        pairs1, new_sigs, old_sigs, new_fps, old_fps, est, cfgu, lcs=True)
-    apairs1 = energy_pairs(cfgu, new_en, old_en).localCheckpoint()
-    gpairs1 = gain_pairs(cfgu, new_en, old_en).localCheckpoint()
-    edges1 = edges1.unionByName(audio_text_edges(
-        apairs1, new_en, old_en, keyed, keyed_new, cfgu, gpairs=gpairs1
-    )).distinct()
     merged = merge_clusters(
-        prev, edges1,
+        prev, verified_edges(cfgu, new, old, keyed, keyed_new),
         new_texts.select(F.col("text_key").alias("clip_id")), cfgu,
     )
     return (

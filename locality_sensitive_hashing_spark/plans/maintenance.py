@@ -1,8 +1,10 @@
 """Incremental-maintenance building blocks (the maintenance loop's
-candidate/screen/edge operators), shared by the spark-submit job
-(jobs/maintain_clusters.py), the driver-channel certification query
-(entry_queries.q_incremental_maintenance_clusters), and the A/B
-harnesses.
+candidate/screen/edge operators).  :func:`verified_edges` assembles
+them into the loop's full edge set and is the only entry point its
+callers use: the spark-submit job's forward fold
+(jobs/maintain_clusters.py), its retraction recompute
+(:func:`survivor_edges_builder`) and the driver-channel certification
+query (entry_queries.q_incremental_maintenance_clusters).
 
 These operate on INTAKE-STORE-shaped tables (streaming/incremental.py
 layout): ``signatures`` (text_key, norm, sig, band_hashes),
@@ -20,9 +22,9 @@ ever scanned and semi-restricted map-side (broadcast endpoint sets),
 never shuffled wholesale.  See each docstring for the per-operator
 shape.
 
-Materialization contract: callers materialize the candidate PAIR frames
-(each feeds an endpoint broadcast and a verify join); the verified EDGE
-frames these functions return stay lazy and are handed straight to the
+Materialization contract: :func:`verified_edges` materializes the
+candidate PAIR frames (each feeds an endpoint broadcast and a verify
+join); the verified EDGE frames stay lazy and are handed straight to the
 cluster operators, which read them exactly once
 (``connected_components`` checkpoints its symmetric edge table,
 ``cluster_delta`` checkpoints its edge input), so the Python screens
@@ -348,64 +350,88 @@ def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
     return passed.unionByName(lcs_pass)
 
 
-def survivor_edges_builder(cfg: Config, est, sigs: DataFrame,
-                           fps: DataFrame, keyed: DataFrame | None = None,
-                           energy: DataFrame | None = None,
-                           anchors: DataFrame | None = None):
+def verified_edges(cfg: Config, new: dict, old: dict | None = None,
+                   keyed_all: DataFrame | None = None,
+                   keyed_new: DataFrame | None = None) -> DataFrame:
+    """ALL verified edges the maintenance loop folds: the one place that
+    decides which axes run and how each is screened.
+
+    ``new`` and ``old`` map intake-store table names
+    (``streaming.incremental.STORE_TABLES``) to frames: ``signatures``
+    and ``fingerprints`` always, ``anchors`` and ``energy`` optionally.
+    A present key switches its axis on -- ``anchors`` adds
+    :func:`sa_pairs` and the lazy LCS term (candidacy without it would
+    create false edges, so the two ship together); ``energy`` adds
+    :func:`energy_pairs` and the :func:`audio_text_edges` classes (and
+    needs ``keyed_all``), plus :func:`gain_pairs` when it carries the
+    combined kernel's ``codes`` column.  ``old=None`` is the bootstrap
+    shape: every ``new`` frame against an empty old side, and
+    ``keyed_new`` defaults to ``keyed_all``.
+
+    Materialization per the module contract: candidate pairs (and the
+    audio/gain pairs) are localCheckpointed here; the returned edges
+    stay lazy.
+    """
+    from locality_sensitive_hashing_spark.operators.minhash import (
+        estimated_jaccard_udf,
+    )
+
+    if old is None:
+        old = {t: df.limit(0) for t, df in new.items()}
+        keyed_new = keyed_all if keyed_new is None else keyed_new
+    lcs = "anchors" in new
+    pairs = batch_pairs(cfg, new["signatures"], old["signatures"],
+                        new["fingerprints"], old["fingerprints"])
+    if lcs:
+        pairs = pairs.unionByName(
+            sa_pairs(cfg, new["anchors"], old["anchors"])).distinct()
+    pairs = pairs.localCheckpoint()  # endpoint broadcast + final join
+    edges = screened_edges(
+        pairs, new["signatures"], old["signatures"], new["fingerprints"],
+        old["fingerprints"], estimated_jaccard_udf(), cfg, lcs=lcs)
+    if "energy" in new:
+        en, old_en = new["energy"], old["energy"]
+        apairs = energy_pairs(cfg, en, old_en).localCheckpoint()
+        gp = (gain_pairs(cfg, en, old_en).localCheckpoint()
+              if "codes" in en.columns else None)
+        edges = edges.unionByName(audio_text_edges(
+            apairs, en, old_en, keyed_all, keyed_new, cfg, gpairs=gp
+        )).distinct()
+    return edges
+
+
+def survivor_edges_builder(cfg: Config, stores: dict,
+                           keyed: DataFrame | None = None):
     """Build the ``edges_fn`` a retraction needs
     (:meth:`ClusterStore.retract`): given a survivor text_key set,
     recompute ALL verified edges among it from the committed stores --
-    the same three text detectors + full text_ok screen and the same
-    audio star/near edge classes the maintenance loop folds forward,
-    restricted to the survivors.
+    :func:`verified_edges` in its bootstrap shape over the stores
+    restricted to the survivors, so the retraction and the forward
+    fold share one edge rule.
 
-    Inputs are the (already tombstone-filtered) corpus-wide store
-    frames; the audio/substring axes run iff their frames are given --
-    the same presence contract as the job.  Scale shape: the survivor
-    set is affected-clusters-sized and BROADCAST; every store is
-    scanned once, semi-restricted map-side, never shuffled wholesale.
-    In-set candidacy reuses the incremental blocking operators with an
-    empty old side (the bootstrap shape), so cap semantics match the
-    forward path.
+    ``stores`` holds the (already tombstone-filtered) corpus-wide store
+    frames keyed by table name, with the same presence contract as
+    :func:`verified_edges`; ``keyed`` is required with ``energy``.
+    Scale shape: the survivor set is affected-clusters-sized and
+    BROADCAST; every store is scanned once, semi-restricted map-side,
+    never shuffled wholesale.
     """
     from pyspark.sql import functions as F
 
     def edges_fn(survivors: DataFrame) -> DataFrame:
-        st = survivors.select(
+        st = F.broadcast(survivors.select(
             F.col("clip_id").alias("text_key")
-        ).localCheckpoint()
-        sigs_s = sigs.join(F.broadcast(st), "text_key").localCheckpoint()
-        fps_s = fps.join(F.broadcast(st), "text_key").localCheckpoint()
-        pairs = batch_pairs(cfg, sigs_s, sigs_s.limit(0),
-                            fps_s, fps_s.limit(0))
-        has_sa = anchors is not None
-        if has_sa:
-            anch_s = anchors.join(F.broadcast(st), "text_key")
-            pairs = pairs.unionByName(
-                sa_pairs(cfg, anch_s, anch_s.limit(0))
-            ).distinct()
-        pairs = pairs.localCheckpoint()
-        edges = screened_edges(pairs, sigs_s, sigs_s.limit(0),
-                               fps_s, fps_s.limit(0), est, cfg, lcs=has_sa)
-        if energy is not None and keyed is not None:
-            keyed_s = keyed.join(
-                F.broadcast(st), "text_key"
-            ).localCheckpoint()
+        ).localCheckpoint())
+        sub = {t: df.join(st, "text_key")
+               for t, df in stores.items() if t != "energy"}
+        keyed_s = None
+        if "energy" in stores:
+            keyed_s = keyed.join(st, "text_key").localCheckpoint()
             akeys = keyed_s.select("audio_key").distinct()
-            en_s = energy.join(
-                F.broadcast(akeys), "audio_key"
-            ).localCheckpoint()
-            apairs = energy_pairs(cfg, en_s, en_s.limit(0)).localCheckpoint()
-            # gain axis iff the store was written by the combined kernel
-            # (codes column present) -- same presence contract as the job
-            gp = (
-                gain_pairs(cfg, en_s, en_s.limit(0)).localCheckpoint()
-                if "codes" in en_s.columns else None
-            )
-            edges = edges.unionByName(
-                audio_text_edges(apairs, en_s, en_s.limit(0),
-                                 keyed_s, keyed_s, cfg, gpairs=gp)
-            ).distinct()
-        return edges
+            sub["energy"] = stores["energy"].join(
+                F.broadcast(akeys), "audio_key")
+        return verified_edges(
+            cfg, {t: df.localCheckpoint() for t, df in sub.items()},
+            keyed_all=keyed_s)
 
     return edges_fn

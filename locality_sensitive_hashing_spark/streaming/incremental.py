@@ -357,7 +357,7 @@ class BatchIngestor:
         # one-text_key-per-row across batches and incremental anchor
         # blocking sees disjoint new/old key sets).  Exploded (text_key,
         # anchor) -- already the blocking-table shape
-        # jobs/maintain_clusters._sa_pairs consumes.
+        # plans.maintenance.sa_pairs consumes.
         if self.substring:
             from locality_sensitive_hashing_spark.operators.suffix_array import (
                 with_anchors,
@@ -371,7 +371,7 @@ class BatchIngestor:
         # identical bytes -- any row is THE canonical input).  Same
         # dedup-vs-other-committed-batches contract as signatures, so the
         # energy store stays one-row-per-distinct-audio and incremental
-        # audio blocking (jobs/maintain_clusters._energy_pairs) sees
+        # audio blocking (plans.maintenance.energy_pairs) sees
         # disjoint new/old key sets.
         if self.audio:
             audio = (

@@ -25,6 +25,7 @@ from locality_sensitive_hashing_spark.operators.minhash import (
     estimated_jaccard_udf,
     explode_bands,
 )
+from locality_sensitive_hashing_spark.plans.maintenance import screened_edges
 from locality_sensitive_hashing_spark.streaming.incremental import BatchIngestor
 
 CFG = dataclasses.replace(DEFAULT_CONFIG, bucket_cap=1 << 20)
@@ -294,7 +295,7 @@ def test_screened_edges_corpus_restriction_broadcasts(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        edges = MJ._screened_edges(
+        edges = screened_edges(
             pairs, sigs.limit(0), sigs, fps.limit(0), fps, est, CFG
         )
         plan = edges._jdf.queryExecution().executedPlan().toString()
@@ -341,7 +342,7 @@ def test_screened_edges_lcs_branch_is_lazy(spark):
         [("a", "b"), ("c", "d")], "id1 string, id2 string"
     ).localCheckpoint()
     est = estimated_jaccard_udf()
-    edges = MJ._screened_edges(
+    edges = screened_edges(
         pairs, sigs.limit(0), sigs, fps.limit(0), fps, est, CFG, lcs=True
     )
     plan = edges._jdf.queryExecution().executedPlan().toString()
@@ -930,3 +931,62 @@ def test_audio_text_edges_gain_restriction_broadcasts(spark):
     assert plan.count("BroadcastHashJoin") >= 3, plan
     got = {tuple(sorted((r.id1, r.id2))) for r in edges.collect()}
     assert got == {("T1", "T2"), ("T3", "T4")}
+
+
+def _edge_rows(df) -> list:
+    return [(r.id1, r.id2) for r in df.collect()]
+
+
+def test_verified_edges_bootstrap_emits_each_edge_once(spark, cfg, tmp_path):
+    """The bootstrap shape (old=None) screens every candidate pair
+    against ONE copy of each endpoint's feature rows: a store passed as
+    both its own new and old side would join each pair 2^4 times, run
+    the Python screens 16x per pair and emit duplicate edges (the text
+    screen's output carries no distinct to hide them)."""
+    from locality_sensitive_hashing_spark.plans.maintenance import (
+        verified_edges,
+    )
+    from locality_sensitive_hashing_spark.streaming.incremental import (
+        read_store,
+    )
+
+    store = os.path.join(str(tmp_path), "intake")
+    clips, _ = make_clips(40, seed=5)
+    BatchIngestor(spark, store, cfg, audio=False, substring=False).process(
+        spark.createDataFrame(clips), 0)
+    new = {t: read_store(spark, store, t)
+           for t in ("signatures", "fingerprints")}
+    rows = _edge_rows(verified_edges(CFG, new))
+    assert rows, "the planted near-dups must produce edges"
+    assert len(rows) == len(set(rows)), sorted(rows)
+
+
+def test_survivor_edges_match_bootstrap_verified_edges(spark, cfg, tmp_path):
+    """Retraction-vs-forward parity: the retraction recompute over ALL
+    of a store's text_keys (survivor_edges_builder) yields exactly the
+    edges the bootstrap fold (verified_edges, old=None) builds from the
+    same store -- on a store carrying every axis (anchors, energy with
+    the combined kernel's gain codes)."""
+    from locality_sensitive_hashing_spark.plans.maintenance import (
+        survivor_edges_builder,
+        verified_edges,
+    )
+    from locality_sensitive_hashing_spark.streaming.incremental import (
+        read_store,
+    )
+
+    store = os.path.join(str(tmp_path), "intake")
+    clips, _ = make_clips(40, seed=5)
+    BatchIngestor(spark, store, cfg).process(spark.createDataFrame(clips), 0)
+    stores = {t: read_store(spark, store, t)
+              for t in ("signatures", "fingerprints", "anchors", "energy")}
+    keyed = read_store(spark, store, "keyed")
+    assert "codes" in stores["energy"].columns
+    survivors = stores["signatures"].select(F.col("text_key").alias("clip_id"))
+    got = set(_edge_rows(
+        survivor_edges_builder(CFG, stores, keyed)(survivors)))
+    ref = set(_edge_rows(verified_edges(CFG, stores, keyed_all=keyed)))
+    text = set(_edge_rows(verified_edges(
+        CFG, {t: stores[t] for t in ("signatures", "fingerprints")})))
+    assert got == ref
+    assert text < ref, "the substring and audio axes must add edges"
