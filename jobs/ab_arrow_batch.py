@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """A/B: Arrow batch size for the est-Jaccard screen (throwaway
-experiment harness). Times the text_pair_metrics-shaped workload --
+experiment harness). Times a text-pair-metrics-shaped workload --
 candidate pairs joined to signature payloads + one Arrow est-J screen --
 at several spark.sql.execution.arrow.maxRecordsPerBatch values.
 """

@@ -28,10 +28,6 @@ def main() -> int:
                     help="TableIO root for stage tables, manifest, metrics")
     ap.add_argument("--master", default=None,
                     help="override spark master (default: env/cluster manager)")
-    ap.add_argument("--detectors", default="minhash,simhash,sa")
-    ap.add_argument("--materialize", default=None,
-                    help='"all" or comma list of stages to commit '
-                         "(default: the 8 resume-valuable boundaries)")
     ap.add_argument("--iceberg-catalog", default=None,
                     help="configured Iceberg catalog name; stage tables "
                          "commit as Iceberg snapshots when the runtime "
@@ -50,14 +46,7 @@ def main() -> int:
     spark = get_spark(args.master, app_name="lsh-dedup-job")
     clips = spark.read.parquet(args.input)
     io = TableIO(spark, args.workdir, iceberg_catalog=args.iceberg_catalog)
-    mat = args.materialize
-    if mat and mat != "all":
-        mat = frozenset(mat.split(","))
-    pipe = DedupPipeline(
-        spark, cfg, io, run_id=args.run_id,
-        detectors=tuple(args.detectors.split(",")),
-        materialize=mat,
-    )
+    pipe = DedupPipeline(spark, cfg, io, run_id=args.run_id)
     clusters = pipe.run(clips)
     n = clusters.count()
     print(json.dumps({

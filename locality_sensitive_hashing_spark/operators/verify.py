@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from locality_sensitive_hashing_spark.config import Config
 from locality_sensitive_hashing_spark.operators.audio_verify import pcm_compare_udf
-from locality_sensitive_hashing_spark.operators.minhash import estimated_jaccard_udf
 from locality_sensitive_hashing_spark.operators.simhash import hamming_distance
 from locality_sensitive_hashing_spark.operators.textgroup import (
     within_group_rep_pairs,
@@ -51,121 +50,20 @@ VERIFIED_COLUMNS = [
 ]
 
 
-def text_pair_metrics(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    fingerprints: DataFrame,
-) -> DataFrame:
-    """Cheap text-pair metrics: (tk1, tk2, detectors, est_jaccard, hamming).
-
-    One pass over the candidate set: the est-Jaccard is ONE Arrow pandas
-    UDF -- a (B, H) integer-matrix compare per batch
-    (minhash.estimated_jaccard_udf; bit-exact vs the Column form) -- and
-    the Hamming distance stays JVM-side bit_count.  The interpreted
-    zip_with/aggregate fold this replaces was the dominant cost of every
-    bench run (Spark does not codegen HOF lambdas: 128 interpreted
-    comparisons per pair).  Materialized as its own stage so the estimate
-    is computed exactly once -- the lazy LCS stage below re-reads this
-    table instead of re-deriving the plan (a left-join back onto the same
-    un-materialized subplan would execute the estimate twice).
-
-    Join shape: signatures and fingerprints are pre-joined into ONE
-    per-text feature table first -- both commit bucketed+sorted by
-    text_key (TableIO DEFAULT_BUCKET_SPEC), so that join is exchange-free
-    -- and the pair table then joins it once per side. The naive
-    4-join form (s1, s2, f1, f2) shuffled the growing pair rows four
-    times, twice while already carrying the signature arrays; this form
-    shuffles them twice total.
-    """
-    feats = signatures.select("text_key", "sig").join(
-        fingerprints.select("text_key", "fingerprint"), "text_key"
-    )
-    f1 = feats.select(
-        F.col("text_key").alias("id1"), F.col("sig").alias("sig1"),
-        F.col("fingerprint").alias("f1"),
-    )
-    f2 = feats.select(
-        F.col("text_key").alias("id2"), F.col("sig").alias("sig2"),
-        F.col("fingerprint").alias("f2"),
-    )
-    est = estimated_jaccard_udf()
-    return (
-        candidates.join(f1, "id1")
-        .join(f2, "id2")
-        .withColumn("est_jaccard", est(F.col("sig1"), F.col("sig2")))
-        .withColumn("hamming", hamming_distance(F.col("f1"), F.col("f2")).cast("int"))
-        .select(
-            F.col("id1").alias("tk1"),
-            F.col("id2").alias("tk2"),
-            "detectors", "est_jaccard", "hamming",
-        )
-    )
-
-
-def verify_text_pairs(
-    metrics: DataFrame, signatures: DataFrame, cfg: Config
-) -> DataFrame:
-    """Finalize text pairs: lazy exact-LCS + text_ok.
-
-    ``metrics``: output of :func:`text_pair_metrics` (ideally read back
-    from its committed stage). The exact LCS (suffix array + LCP) is
-    computed ONLY for pairs whose verdict depends on it:
-    anchor-candidates ('sa' in detectors) with est-Jaccard and Hamming
-    both below their thresholds. For every other pair lcs cannot change
-    text_ok and is reported as -1 (not computed) -- the numpy oracle
-    applies the identical rule, and the cluster output is provably
-    unchanged vs computing LCS everywhere.
-
-    Output: (tk1, tk2, detectors, est_jaccard, hamming, lcs, text_ok).
-    """
-    from locality_sensitive_hashing_spark.operators.suffix_array import lcs_udf
-
-    needs_lcs = (
-        F.array_contains("detectors", "sa")
-        & (F.col("est_jaccard") < F.lit(cfg.jaccard_threshold))
-        & (F.col("hamming") > F.lit(cfg.hamming_t))
-    )
-    # filter -> compute -> left-join back: Spark hoists Python UDFs out of
-    # CASE WHEN into eager ArrowEvalPython nodes, so a `when(needs_lcs,
-    # udf)` would still SA-verify every row; a filtered subframe cannot.
-    n1 = signatures.select(F.col("text_key").alias("tk1"), F.col("norm").alias("norm1"))
-    n2 = signatures.select(F.col("text_key").alias("tk2"), F.col("norm").alias("norm2"))
-    lcs = lcs_udf(cfg.sa_min_len)
-    lcs_subset = (
-        metrics.where(needs_lcs)
-        .join(n1, "tk1")
-        .join(n2, "tk2")
-        .select("tk1", "tk2", lcs(F.col("norm1"), F.col("norm2")).alias("_lcs"))
-    )
-    df = (
-        metrics.join(lcs_subset, ["tk1", "tk2"], "left")
-        .withColumn("lcs", F.coalesce(F.col("_lcs"), F.lit(-1)).cast("long"))
-        .drop("_lcs")
-    )
-    text_ok = (
-        (F.col("est_jaccard") >= F.lit(cfg.jaccard_threshold))
-        | (F.col("hamming") <= F.lit(cfg.hamming_t))
-        | (F.col("lcs") >= F.lit(cfg.sa_min_len))
-    )
-    return df.select(
-        "tk1", "tk2", "detectors", "est_jaccard", "hamming", "lcs"
-    ).withColumn("text_ok", text_ok)
-
-
 # ---------------------------------------------------------------------------
 # One-pass text verification (round 6).
 #
-# The two-stage form above (text_pair_metrics materialized, then
-# verify_text_pairs over the cache) pays, at bench scale, a full in-memory
-# materialization of the 10M-row metrics table (~20 s), a second pass over
-# it, a (tk1, tk2) left-join-back shuffle, and -- dominating everything --
-# a 32-gram screen that re-hashes both texts of every one of the ~1.9M
-# est-refuted SA-candidate pairs from scratch (131 us/pair measured; 87%
-# of the pairs sharing each text).  The one-pass forms below fuse metrics
-# + lazy LCS + text_ok into a single job and memoize the per-text gram
-# arrays, emitting BIT-IDENTICAL rows (pinned by
-# tests/test_spark_parity.py::test_text_verified_exact and
-# tests/test_operators.py round-6 path-equality tests).
+# Metrics (est-Jaccard + Hamming), the lazy exact LCS and text_ok are
+# derived in a single job.  The exact LCS (suffix array + LCP) is computed
+# ONLY for pairs whose verdict depends on it: 'sa'-detector candidates
+# with est-Jaccard below cfg.jaccard_threshold AND Hamming above
+# cfg.hamming_t.  Every other pair reports lcs = -1 (not computed) -- the
+# numpy oracle applies the identical rule, and text_ok cannot change.
+# The two forms below -- a worker-side lookup store for small feature
+# tables (it also memoizes the per-text 32-gram screen arrays) and a join
+# form past the pipeline's size gate -- emit BIT-IDENTICAL rows (pinned by
+# tests/test_r06_text_paths.py, which also checks both against the numpy
+# oracle).
 # ---------------------------------------------------------------------------
 
 # Per-WORKER feature store for the lookup kernel, keyed by (pid, dirs):
@@ -235,7 +133,7 @@ def pair_metrics_lookup_udf(sig_dir: str, fp_dir: str, cfg: Config):
       :func:`..minhash.estimated_jaccard_udf` ((# equal)/H in float64);
     - hamming: popcount(xor) over the uint64 fingerprint -- integer-exact
       equal to the JVM ``bit_count``;
-    - lcs: the lazy sentinel rule of :func:`verify_text_pairs` fused into
+    - lcs: the lazy sentinel rule (section comment above) fused into
       the kernel (sa_flag AND hamming > t AND est < threshold), with the
       32-gram screen of ``hashing.lcs_at_least`` running over MEMOIZED
       per-text sorted-unique gram arrays: screen emptiness over unique
@@ -311,33 +209,22 @@ def _text_ok_expr(cfg: Config):
     )
 
 
-def _sa_flag_and_prov(candidates: DataFrame, names: list[str] | None):
-    """(sa_flag Column, provenance column name) for a candidates frame.
+def _sa_flag(names: list[str]):
+    """Column: the 'sa' bit of a mask-schema candidates frame.
 
-    Mask-schema candidates (round 6 commit form) test the 'sa' bit
-    directly and pass the int64 mask through -- the text_verified commit
-    then stores the mask too, shedding the 10M-row array<string> encode
-    the same way the candidates commit did (measured ~2 s off the stage
+    Candidates arrive in the committed mask form (id1, id2,
+    detectors_mask) and the mask passes through -- the text_verified
+    commit stores it too, shedding the 10M-row array<string> encode the
+    same way the candidates commit did (measured ~2 s off the stage
     write); the pipeline decodes on read-back
-    (operators/candidates.decode_mask_col).  Array-schema inputs keep the
-    legacy behavior.
+    (operators/candidates.decode_mask_col).
     """
     from locality_sensitive_hashing_spark.operators.candidates import (
         detector_bits,
     )
 
-    if "detectors_mask" in candidates.columns:
-        if not names:
-            raise ValueError(
-                "mask-schema candidates need the detector name list")
-        bit = detector_bits(names)["sa"] if "sa" in names else 0
-        sa = (
-            F.col("detectors_mask").bitwiseAND(F.lit(bit).cast("long")) != 0
-            if bit
-            else F.lit(False)
-        )
-        return sa, "detectors_mask"
-    return F.array_contains("detectors", "sa"), "detectors"
+    bit = detector_bits(names)["sa"]
+    return F.col("detectors_mask").bitwiseAND(F.lit(bit).cast("long")) != 0
 
 
 def text_verified_lookup(
@@ -345,7 +232,7 @@ def text_verified_lookup(
     sig_dir: str,
     fp_dir: str,
     cfg: Config,
-    names: list[str] | None = None,
+    names: list[str],
 ) -> DataFrame:
     """One-pass text_verified via the worker-side lookup kernel.
 
@@ -355,17 +242,17 @@ def text_verified_lookup(
     memory; the pipeline gates on their on-disk size and falls back to
     :func:`text_verified_fused` (plans/pipeline.py).
 
-    Mask-schema candidates yield a mask-schema output (column order
-    tk1, tk2, detectors_mask, ...) -- see :func:`_sa_flag_and_prov`.
+    ``candidates`` is mask-schema (``names`` are its detector_bits
+    names); the output is too: tk1, tk2, detectors_mask, est_jaccard,
+    hamming, lcs, text_ok -- see :func:`_sa_flag`.
     """
-    sa, prov = _sa_flag_and_prov(candidates, names)
     kernel = pair_metrics_lookup_udf(sig_dir, fp_dir, cfg)
     return (
         candidates
-        .withColumn("_sa", sa)
+        .withColumn("_sa", _sa_flag(names))
         .withColumn("_m", kernel(F.col("id1"), F.col("id2"), F.col("_sa")))
         .select(F.col("id1").alias("tk1"), F.col("id2").alias("tk2"),
-                prov, F.col("_m.est").alias("est_jaccard"),
+                "detectors_mask", F.col("_m.est").alias("est_jaccard"),
                 F.col("_m.hamming").alias("hamming"),
                 F.col("_m.lcs").alias("lcs"))
         .withColumn("text_ok", _text_ok_expr(cfg))
@@ -435,17 +322,18 @@ def text_verified_fused(
     signatures: DataFrame,
     fingerprints: DataFrame,
     cfg: Config,
-    names: list[str] | None = None,
+    names: list[str],
 ) -> DataFrame:
     """One-pass text_verified, join form (scale fallback).
 
-    Same single-job fusion as :func:`text_verified_lookup` but the
-    features arrive through the bucketed signature/fingerprint joins, so
-    it scales to corpora whose per-text tables exceed worker memory.
-    vs the two-stage path it still removes the metrics materialization,
-    the second metrics pass and the (tk1, tk2) left-join-back shuffle.
-    Norms ride the joins gated to the rows that can need them (norm1 to
-    'sa'-detector pairs -- known BEFORE any join -- and norm2 to
+    Same single-job fusion and mask-schema input/output as
+    :func:`text_verified_lookup` but the features arrive through the
+    bucketed signature/fingerprint joins, so it scales to corpora whose
+    per-text tables exceed worker memory.  Signatures and fingerprints
+    are pre-joined into ONE per-text feature table (both commit
+    bucketed+sorted by text_key, so that join is exchange-free) and the
+    pair table joins it once per side.  Norms ride the joins gated to
+    the rows that can need them (norm1 to 'sa'-detector pairs -- known BEFORE any join -- and norm2 to
     saflag rows map-side after the second join), so the second pair
     exchange carries norm bytes only for the SA-candidate fraction and
     the Arrow boundary only for the refutable fraction.
@@ -460,11 +348,10 @@ def text_verified_fused(
                       F.col("sig").alias("sig2"),
                       F.col("norm").alias("norm2"),
                       F.col("fingerprint").alias("fp2"))
-    sa, prov = _sa_flag_and_prov(candidates, names)
     kernel = est_lcs_fused_udf(cfg)
     return (
         candidates
-        .withColumn("_sa", sa)
+        .withColumn("_sa", _sa_flag(names))
         .join(g1, "id1")
         # gate norm1 BEFORE the id2 exchange: non-SA pairs ship no norm
         .withColumn("_n1", F.when(F.col("_sa"), F.col("norm1")))
@@ -480,7 +367,7 @@ def text_verified_fused(
                                   F.col("_n1"), F.col("_n2"),
                                   F.col("_saflag")))
         .select(F.col("id1").alias("tk1"), F.col("id2").alias("tk2"),
-                prov, F.col("_el.est").alias("est_jaccard"),
+                "detectors_mask", F.col("_el.est").alias("est_jaccard"),
                 "hamming", F.col("_el.lcs").alias("lcs"))
         .withColumn("text_ok", _text_ok_expr(cfg))
     )
@@ -668,12 +555,10 @@ def expand_and_verify(
     chains: DataFrame,
     clips: DataFrame,
     cfg: Config,
-    energy: bool = True,
-    fingerprint: bool = True,
 ) -> DataFrame:
-    """Clip-level verified edges: chain + within-group + cross-group
-    (+ audio-content energy edges when ``energy``, + gain-invariant
-    fingerprint edges when ``fingerprint``).
+    """Clip-level verified edges: chain + within-group + cross-group PCM
+    edges, audio-content energy edges and gain-invariant fingerprint
+    edges.
 
     ``classes``: (text_key, audio_key, rep, n_members);
     ``chains``: (id1, id2, text_key, audio_key).
@@ -785,17 +670,12 @@ def expand_and_verify(
         F.lit(False).alias("is_dup"),
     )
 
-    out = (
+    return (
         chain.select(*VERIFIED_COLUMNS)
         .unionByName(survivors.select(*VERIFIED_COLUMNS))
         .unionByName(rejected.select(*VERIFIED_COLUMNS))
+        .unionByName(
+            energy_content_edges(classes, cfg).select(*VERIFIED_COLUMNS))
+        .unionByName(
+            gain_content_edges(classes, cfg).select(*VERIFIED_COLUMNS))
     )
-    if energy:
-        out = out.unionByName(
-            energy_content_edges(classes, cfg).select(*VERIFIED_COLUMNS)
-        )
-    if fingerprint:
-        out = out.unionByName(
-            gain_content_edges(classes, cfg).select(*VERIFIED_COLUMNS)
-        )
-    return out

@@ -1,9 +1,8 @@
 """The dedup stage DAG: orchestration, materialization, resume, metrics.
 
-Stage graph (committed tables in CAPS below per DEFAULT_MATERIALIZE;
-lowercase stages are lazy passthroughs fused into their consumer's job;
-SURVEY.md section 3.2, re-architected around content classes --
-operators/textgroup.py):
+Stage graph (the 8 COMMITTED_STAGES in CAPS below; lowercase stages are
+lazy plans fused into their consumer's job; SURVEY.md section 3.2,
+re-architected around content classes -- operators/textgroup.py):
 
     clips -> KEYED(text_key, audio_key)
     KEYED -> texts (distinct transcripts) -> SIGNATURES(O2-O7)
@@ -11,7 +10,7 @@ operators/textgroup.py):
     SIGNATURES -> cand_minhash(O8-O10)   [text pairs]
     FINGERPRINTS -> cand_simhash(O13-O14)[text pairs]
     SIGNATURES -> cand_sa(O15)           [text pairs]
-    cand_* -> CANDIDATES(O16) -> text_metrics -> TEXT_VERIFIED(O11, O20)
+    cand_* -> CANDIDATES(O16) -> TEXT_VERIFIED(O11, O20)
     KEYED -> AUDIO_CLASSES / chain_edges
       (the audio_classes kernel also emits the frame-energy content
        profile AND the gain-invariant sign-bit fingerprint per distinct
@@ -24,14 +23,15 @@ operators/textgroup.py):
 
 The reference ran its dataflow as GAE MapReduce phases materialized
 through the datastore (REF?mapreduce.yaml, UNVERIFIED -- empty mount);
-here materialization is a PER-STAGE POLICY (``materialize``): only
-resume-valuable boundaries commit to TableIO (Iceberg or
+here only the resume-valuable boundaries commit to TableIO (Iceberg or
 parquet+manifest); the rest stay lazy and fuse into the next committed
-stage's job.
+stage's job.  All five detectors always run: the detector set is not
+part of ``config_id``, so a run with fewer would resume into (or leave
+behind) commits whose clusters miss a whole edge source.
 
 - **Resume** (O26, BASELINE.json "resumable from the last committed
   snapshot/checkpoint"): a committed stage whose (table, config_id)
-  snapshot exists is skipped and read back; a passthrough stage simply
+  snapshot exists is skipped and read back; a lazy stage simply
   rebuilds from its (committed) inputs -- same results either way.
 - **Lineage/metrics** (O23): per-partition row counts + wall-clock per
   committed stage append to the ``metrics`` table; capped-out
@@ -40,7 +40,7 @@ stage's job.
 - **Why not commit everything** (round-1 lesson): 14 serial stage
   commits each pay write + read-back + scheduler round-trips that do NOT
   shrink with parallelism -- that fixed floor capped 8->32 scaling
-  efficiency at 0.44 (BENCH/SCALING notes). The default policy commits 8
+  efficiency at 0.44 (BENCH/SCALING notes). The pipeline commits 8
   boundaries; cheap derivations (``texts``, ``chain_edges``) and the
   three detector pair-sets fuse into their consumer's job, where Spark's
   DAG scheduler runs the independent detector subtrees concurrently
@@ -70,7 +70,6 @@ from pyspark.sql import functions as F
 from locality_sensitive_hashing_spark.config import Config
 from locality_sensitive_hashing_spark.metrics import partition_lineage
 from locality_sensitive_hashing_spark.operators.candidates import (
-    decode_detector_mask,
     decode_mask_col,
     dropped_blocks,
     pairs_from_blocks,
@@ -97,33 +96,32 @@ from locality_sensitive_hashing_spark.operators.textgroup import (
 )
 from locality_sensitive_hashing_spark.operators.verify import (
     expand_and_verify,
-    text_pair_metrics,
     text_verified_fused,
     text_verified_lookup,
-    verify_text_pairs,
 )
 from locality_sensitive_hashing_spark.sources.tables import TableIO
 
 
 # resume-valuable commit boundaries (see module docstring for why the
-# other six stages pass through lazily by default)
-DEFAULT_MATERIALIZE = frozenset({
+# other stages stay lazy)
+COMMITTED_STAGES = frozenset({
     "keyed", "audio_classes", "signatures", "fingerprints",
     "candidates", "text_verified", "verified", "clusters",
 })
 
-ALL_STAGES = frozenset(DEFAULT_MATERIALIZE | {
-    "texts", "chain_edges", "cand_minhash", "cand_simhash", "cand_sa",
-    "text_metrics",
-})
+# the text-pair detectors, in the order their pair-sets enter the
+# candidates union; the committed candidates/text_verified tables store
+# provenance as a detector_bits mask over these names
+TEXT_DETECTORS = ("minhash", "simhash", "sa")
 
 
 class DedupPipeline:
     """Runs the full near-duplicate pipeline over a clips DataFrame.
 
-    ``materialize``: stage names to commit to TableIO ("all" for every
-    stage -- the round-1 behavior, useful for stage-level debugging);
-    non-listed stages stay lazy and fuse into downstream jobs.
+    All five detectors (the three in TEXT_DETECTORS plus the audio
+    energy and gain-fingerprint axes) feed one verified-edge set; the
+    COMMITTED_STAGES commit to TableIO and every other stage stays lazy
+    and fuses into a downstream job.
     """
 
     def __init__(
@@ -132,31 +130,13 @@ class DedupPipeline:
         cfg: Config,
         io: TableIO,
         run_id: str | None = None,
-        detectors: tuple[str, ...] = (
-            "minhash", "simhash", "sa", "energy", "fingerprint"
-        ),
-        materialize: frozenset[str] | str | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
         self.io = io
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.detectors = detectors
-        if materialize is None:
-            materialize = DEFAULT_MATERIALIZE
-        elif materialize == "all":
-            materialize = ALL_STAGES
-        self.materialize = frozenset(materialize)
-        unknown = self.materialize - ALL_STAGES
-        if unknown:
-            # a typo here would silently disable the resume point
-            raise ValueError(
-                f"unknown materialize stage(s) {sorted(unknown)}; "
-                f"valid: {sorted(ALL_STAGES)}"
-            )
         self.executed_stages: list[str] = []
         self.skipped_stages: list[str] = []
-        self.passthrough_stages: list[str] = []
         # driver-side walls that run OUTSIDE stage commits (cache
         # materialization, async-metrics drain): bench.py merges these
         # into its per-stage report so no wall-clock is unattributed
@@ -167,11 +147,6 @@ class DedupPipeline:
     # -- stage runner -------------------------------------------------------
     def _stage(self, name: str, build) -> DataFrame:
         cid = self.cfg.config_id
-        if name not in self.materialize:
-            # passthrough: no commit, no job -- the plan fuses into the
-            # next materialized downstream stage
-            self.passthrough_stages.append(name)
-            return build()
         if self.io.committed(name, cid):
             self.skipped_stages.append(name)
             return self.io.read(name)
@@ -235,12 +210,14 @@ class DedupPipeline:
         """Execute the DAG; independent branches run CONCURRENTLY.
 
         The audio branch (audio_classes, chain_edges) shares no input
-        with the text branch, and the three detectors are mutually
-        independent, so they are submitted from worker threads (Spark
-        sessions are thread-safe; session.py enables FAIR scheduling).
-        On a real cluster this keeps executors saturated across stage
-        boundaries; in local mode it overlaps UDF compute with shuffle
-        I/O. Stage commits stay atomic (TableIO holds a manifest lock).
+        with the text branch, so the audio_classes, signatures and
+        fingerprints commits are submitted from worker threads (Spark
+        sessions are thread-safe; session.py enables FAIR scheduling);
+        the three text detector subtrees are lazy and run concurrently
+        inside the one ``candidates`` job.  On a real cluster this keeps
+        executors saturated across stage boundaries; in local mode it
+        overlaps UDF compute with shuffle I/O. Stage commits stay atomic
+        (TableIO holds a manifest lock).
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -266,11 +243,11 @@ class DedupPipeline:
             self.io.write(dropped_groups(cl, cfg), "dropped_groups", cfg.config_id)
             return cl
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             # audio branch in parallel with the whole text branch
             f_classes = pool.submit(self._stage, "audio_classes", build_classes)
 
-            texts = self._stage("texts", lambda: distinct_texts(keyed))
+            texts = distinct_texts(keyed)
             f_sigs = pool.submit(
                 self._stage,
                 "signatures",
@@ -286,149 +263,73 @@ class DedupPipeline:
             )
             signatures = f_sigs.result()
             fingerprints = f_fps.result()
-
-            # Binary pair ids through the detector subtrees (round 6):
-            # text_key is fixed-width lowercase hex, so unhex ONCE per
-            # blocking-table row here and let every downstream pair
-            # emission, join, broadcast and the union's dedup key carry
-            # the 16-byte binary instead of the 32-char string -- the
-            # per-emission unhex pair (~54M emissions at bench scale)
-            # drops to one call per block row and the subtree broadcast
-            # relations shrink ~40%.  Binary unsigned-byte order ==
-            # lowercase-hex string order (fixed width), so id1 < id2 and
-            # all cap decisions are unchanged; the union decodes the
-            # identical hex ids (test-pinned).  Only when the subtree
-            # stages stay passthrough: a materialize="all" debug run
-            # keeps the legacy string-id stage commits.
-            packed = not ({"cand_minhash", "cand_simhash", "cand_sa"}
-                          & self.materialize)
-            sigs_cand = (
-                signatures.withColumn("text_key", F.unhex("text_key"))
-                if packed else signatures
-            )
-            fps_cand = (
-                fingerprints.withColumn("text_key", F.unhex("text_key"))
-                if packed else fingerprints
-            )
-
-            def build_minhash():
-                buckets = explode_bands(sigs_cand, id_col="text_key")
-                # dedup=False: union_candidates' groupBy dedups with one
-                # shuffle for all detectors (map-side combine collapses
-                # the per-bucket duplicates before they ship)
-                return pairs_from_blocks(
-                    buckets, ["band_id", "band_hash"], cfg.bucket_cap,
-                    "minhash", id_col="text_key", dedup=False,
-                )
-
-            # detector pair-sets: passthrough by default, so these return
-            # lazy plans that all execute INSIDE the one `candidates`
-            # commit, where the DAG scheduler runs the three independent
-            # subtrees concurrently. (pool.submit still parallelizes the
-            # materialize="all" debugging mode.)
-            futures = []
-            cand_names: list[str] = []
-            if "minhash" in self.detectors:
-                futures.append(pool.submit(self._stage, "cand_minhash", build_minhash))
-                cand_names.append("minhash")
-            if "simhash" in self.detectors:
-                futures.append(
-                    pool.submit(
-                        self._stage,
-                        "cand_simhash",
-                        lambda: simhash_candidates(
-                            fps_cand, cfg, id_col="text_key", dedup=False
-                        ),
-                    )
-                )
-                cand_names.append("simhash")
-            if "sa" in self.detectors:
-                futures.append(
-                    pool.submit(
-                        self._stage,
-                        "cand_sa",
-                        lambda: sa_anchor_pairs(
-                            sigs_cand, cfg, id_col="text_key", dedup=False
-                        ),
-                    )
-                )
-                cand_names.append("sa")
-            cand_parts = [f.result() for f in futures]
             classes = f_classes.result()
 
-        chains = self._stage("chain_edges", lambda: chain_edges(keyed))
-        # one constant detector tag per subtree -> the pair-dedup groupBy
-        # aggregates a primitive bitmask instead of a collect_set buffer
-        # (operators/candidates.union_candidates_bitmask; same rows).
-        # Round 6 commit shape: the dedup keys on the packed
-        # unhex(id1)||unhex(id2) binary (text_keys are fixed-width hex --
-        # half the key bytes on the pipeline's largest shuffle) and the
-        # stage table stores the raw int64 mask instead of the decoded
-        # array (array encode off the 10M-row write); the read-back
-        # decodes to the identical detectors array below, so every
-        # downstream consumer and the resume path see the same rows.
-        cand_raw = self._stage(
-            "candidates",
-            lambda: union_candidates_bitmask(
-                cand_parts, cand_names, hex_ids=True, as_mask=True,
-                packed_ids=packed,
+        # Binary pair ids through the detector subtrees (round 6):
+        # text_key is fixed-width lowercase hex, so unhex ONCE per
+        # blocking-table row here and let every downstream pair emission,
+        # join, broadcast and the union's dedup key carry the 16-byte
+        # binary instead of the 32-char string -- the per-emission unhex
+        # pair (~54M emissions at bench scale) drops to one call per block
+        # row and the subtree broadcast relations shrink ~40%.  Binary
+        # unsigned-byte order == lowercase-hex string order (fixed width),
+        # so id1 < id2 and all cap decisions are unchanged; the union
+        # decodes the identical hex ids (test-pinned).
+        sigs_cand = signatures.withColumn("text_key", F.unhex("text_key"))
+        fps_cand = fingerprints.withColumn("text_key", F.unhex("text_key"))
+        # The three detector pair-sets are lazy plans that all execute
+        # INSIDE the one `candidates` commit, where the DAG scheduler runs
+        # the independent subtrees concurrently.  dedup=False: the union's
+        # groupBy dedups with one shuffle for all detectors (map-side
+        # combine collapses the per-bucket duplicates before they ship).
+        cand_parts = [
+            pairs_from_blocks(
+                explode_bands(sigs_cand, id_col="text_key"),
+                ["band_id", "band_hash"], cfg.bucket_cap,
+                "minhash", id_col="text_key", dedup=False,
             ),
+            simhash_candidates(fps_cand, cfg, id_col="text_key", dedup=False),
+            sa_anchor_pairs(sigs_cand, cfg, id_col="text_key", dedup=False),
+        ]
+        chains = chain_edges(keyed)
+        # one constant detector tag per subtree -> the pair-dedup groupBy
+        # aggregates a primitive bitmask instead of a collect_set buffer,
+        # keyed on the packed id1||id2 binary (half the key bytes on the
+        # pipeline's largest shuffle); the stage stores the raw int64
+        # mask (array encode off the 10M-row write).
+        # (operators/candidates.union_candidates_bitmask)
+        candidates = self._stage(
+            "candidates",
+            lambda: union_candidates_bitmask(cand_parts, TEXT_DETECTORS),
         )
-        # mask-schema commits stay mask-form through the one-pass text
-        # verify (its commit then stores the mask too -- round 6: the
-        # array<string> encode cost ~2 s of the 10M-row stage write);
-        # the decoded array form feeds the debug/two-stage path only.
-        has_mask = "detectors_mask" in cand_raw.columns
-        candidates = (
-            decode_detector_mask(cand_raw, cand_names) if has_mask
-            else cand_raw
-        )
-        # -- text verification (round 6: one-pass forms) ------------------
-        # When text_metrics stays a passthrough (the default), the metrics
-        # + lazy-LCS + text_ok derivation runs as ONE job instead of the
-        # old persist-metrics / second-pass / left-join-back shape
-        # (bit-identical rows; equality + parity test-pinned).  Strategy
-        # is size-adaptive, mirroring guide sections 3.1/8: when the
+        # -- text verification: metrics + lazy LCS + text_ok in ONE job --
+        # Size-adaptive, mirroring guide sections 3.1/8: when the
         # committed per-text feature tables are small enough for worker
         # memory, the pairs cross the Python boundary as (id1, id2, flag)
         # ONLY and every feature comes from a worker-side store read
         # straight from the stage commit (text_verified_lookup, zero
         # joins); past the size gate the features ride the bucketed joins
-        # (text_verified_fused, scales like the old path).  The
-        # materialized-text_metrics debug mode keeps the original
-        # two-stage derivation.
-        text_metrics = self._stage(
-            "text_metrics",
-            lambda: text_pair_metrics(candidates, signatures, fingerprints),
-        )
-        if "text_metrics" not in self.materialize:
-            cand_in = cand_raw if has_mask else candidates
-            lookup_dirs = self._text_lookup_dirs()
-            if lookup_dirs is not None:
-                builder = lambda: text_verified_lookup(  # noqa: E731
-                    cand_in, *lookup_dirs, cfg, names=cand_names
-                )
-            else:
-                builder = lambda: text_verified_fused(  # noqa: E731
-                    cand_in, signatures, fingerprints, cfg, names=cand_names
-                )
-            text_verified = self._stage("text_verified", builder)
-            if "detectors_mask" in text_verified.columns:
-                text_verified = decode_mask_col(text_verified, cand_names)
-        else:
-            # debug mode (materialize="all"): committed metrics table +
-            # the original two-stage derivation over it
-            text_verified = self._stage(
-                "text_verified",
-                lambda: verify_text_pairs(text_metrics, signatures, cfg),
+        # (text_verified_fused).  Both emit bit-identical rows
+        # (test-pinned).  Mask-form candidates in, mask-form commit out
+        # (the array<string> encode cost ~2 s of the 10M-row stage
+        # write); the read-back decodes to the detectors array.
+        lookup_dirs = self._text_lookup_dirs()
+        if lookup_dirs is not None:
+            builder = lambda: text_verified_lookup(  # noqa: E731
+                candidates, *lookup_dirs, cfg, names=TEXT_DETECTORS
             )
-        energy = "energy" in self.detectors
-        fingerprint = "fingerprint" in self.detectors
+        else:
+            builder = lambda: text_verified_fused(  # noqa: E731
+                candidates, signatures, fingerprints, cfg,
+                names=TEXT_DETECTORS,
+            )
+        text_verified = decode_mask_col(
+            self._stage("text_verified", builder), TEXT_DETECTORS
+        )
         verified = self._stage(
             "verified",
             lambda: expand_and_verify(
                 text_verified, classes, chains, clips, cfg,
-                energy=energy, fingerprint=fingerprint,
             ),
         )
         # -- advisory loud-drop logs (O25): over-cap buckets across all
@@ -447,9 +348,7 @@ class DedupPipeline:
             else:
                 fn()
 
-        if "minhash" in self.detectors and not self.io.committed(
-            "dropped_buckets", cfg.config_id
-        ):
+        if not self.io.committed("dropped_buckets", cfg.config_id):
             def emit_dropped():
                 self.io.write(
                     dropped_blocks(
@@ -462,9 +361,7 @@ class DedupPipeline:
                 )
 
             submit_advisory(emit_dropped)
-        if energy and not self.io.committed(
-            "dropped_energy_buckets", cfg.config_id
-        ):
+        if not self.io.committed("dropped_energy_buckets", cfg.config_id):
             def emit_dropped_energy():
                 from locality_sensitive_hashing_spark.operators.audio_lsh import (
                     explode_energy_bands,
@@ -484,9 +381,7 @@ class DedupPipeline:
                 )
 
             submit_advisory(emit_dropped_energy)
-        if fingerprint and not self.io.committed(
-            "dropped_fp_buckets", cfg.config_id
-        ):
+        if not self.io.committed("dropped_fp_buckets", cfg.config_id):
             def emit_dropped_fp():
                 from locality_sensitive_hashing_spark.operators.audio_fingerprint import (
                     fingerprint_blocks,

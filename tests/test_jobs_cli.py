@@ -54,7 +54,7 @@ def _submit(tmp_path, script, *args):
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT) and not shutil.which(
     "spark-submit"), reason="spark-submit not on PATH")
 def test_dedup_job_spark_submit_and_resume(tmp_path):
-    clips, _ = make_clips(40, seed=47)
+    clips, planted = make_clips(40, seed=47)
     src = os.path.join(str(tmp_path), "clips.parquet")
     pq.write_table(
         pa.Table.from_pandas(clips, schema=_SCHEMA, preserve_index=False), src)
@@ -65,6 +65,14 @@ def test_dedup_job_spark_submit_and_resume(tmp_path):
     assert out["n_rows"] == len(clips)
     assert out["executed_stages"] and not out["skipped_stages"]
     assert os.path.isdir(os.path.join(wd, "clusters"))
+    # the job runs every detector: each planted dup pair (the audio
+    # energy and gain-fingerprint classes included) shares a cluster and
+    # no negative control does
+    cl = pq.read_table(os.path.join(wd, "clusters")).to_pandas()
+    cid = dict(zip(cl.clip_id, cl.cluster_id))
+    for r in planted.itertuples():
+        same = cid[r.id1] == cid[r.id2]
+        assert same == r.expect_dup, (r.dup_class, r.id1, r.id2)
 
     # resume ACROSS spark-submit processes: a rerun on the same workdir
     # skips every committed stage and reports identical row count

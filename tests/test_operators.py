@@ -97,75 +97,6 @@ def test_union_candidates_provenance(spark):
     assert got == {("a", "b"): ["minhash", "simhash"], ("c", "d"): ["simhash"]}
 
 
-def test_union_candidates_bitmask_equals_legacy(spark):
-    """The pipeline's primitive bit_or union (round 6) emits exactly the
-    legacy array_sort(collect_set) rows -- including cross-band duplicate
-    collapse and sorted provenance arrays."""
-    from locality_sensitive_hashing_spark.operators.candidates import (
-        union_candidates_bitmask,
-    )
-
-    p1 = spark.createDataFrame(
-        [("a", "b", "minhash"), ("a", "b", "minhash"), ("b", "c", "minhash")],
-        "id1 string, id2 string, detector string",
-    )
-    p2 = spark.createDataFrame(
-        [("a", "b", "simhash"), ("c", "d", "simhash")],
-        "id1 string, id2 string, detector string",
-    )
-    p3 = spark.createDataFrame(
-        [("a", "b", "sa"), ("b", "c", "sa")],
-        "id1 string, id2 string, detector string",
-    )
-    legacy = union_candidates(p1, p2, p3).toPandas()
-    new = union_candidates_bitmask([p1, p2, p3],
-                                   ["minhash", "simhash", "sa"]).toPandas()
-    key = lambda df: {  # noqa: E731
-        (r.id1, r.id2): list(r.detectors) for r in df.itertuples()
-    }
-    assert key(new) == key(legacy)
-    assert key(new)[("a", "b")] == ["minhash", "sa", "simhash"]
-
-
-def test_union_bitmask_hex_and_mask_forms_equal_legacy(spark):
-    """Round-6 commit shape: the packed unhex(id1)||unhex(id2) dedup key
-    and the raw-mask output decode back to exactly the legacy rows for
-    fixed-width lowercase-hex ids (the pipeline's text_key form)."""
-    from locality_sensitive_hashing_spark.operators.candidates import (
-        decode_detector_mask,
-        union_candidates_bitmask,
-    )
-
-    h = lambda s: s * 8  # noqa: E731 -- 8-char lowercase hex ids
-    p1 = spark.createDataFrame(
-        [(h("0a"), h("1b"), "minhash"), (h("0a"), h("1b"), "minhash"),
-         (h("1b"), h("2c"), "minhash")],
-        "id1 string, id2 string, detector string",
-    )
-    p2 = spark.createDataFrame(
-        [(h("0a"), h("1b"), "simhash"), (h("2c"), h("ff"), "simhash")],
-        "id1 string, id2 string, detector string",
-    )
-    p3 = spark.createDataFrame(
-        [(h("0a"), h("1b"), "sa"), (h("1b"), h("2c"), "sa")],
-        "id1 string, id2 string, detector string",
-    )
-    names = ["minhash", "simhash", "sa"]
-    legacy = union_candidates(p1, p2, p3).toPandas()
-    hexed = union_candidates_bitmask(
-        [p1, p2, p3], names, hex_ids=True).toPandas()
-    masked = decode_detector_mask(
-        union_candidates_bitmask([p1, p2, p3], names, hex_ids=True,
-                                 as_mask=True),
-        names,
-    ).toPandas()
-    key = lambda df: {  # noqa: E731
-        (r.id1, r.id2): list(r.detectors) for r in df.itertuples()
-    }
-    assert key(hexed) == key(legacy)
-    assert key(masked) == key(legacy)
-
-
 def test_union_bitmask_packed_binary_ids_equal_legacy(spark):
     """Round 6: pre-unhexed BINARY pair ids through the union (the
     pipeline unhexes once per blocking-table row) decode back to exactly
@@ -173,7 +104,7 @@ def test_union_bitmask_packed_binary_ids_equal_legacy(spark):
     which relies on binary unsigned-byte order matching lowercase-hex
     string order for fixed-width keys."""
     from locality_sensitive_hashing_spark.operators.candidates import (
-        decode_detector_mask,
+        decode_mask_col,
         union_candidates_bitmask,
     )
 
@@ -188,16 +119,17 @@ def test_union_bitmask_packed_binary_ids_equal_legacy(spark):
         F.unhex("id1").alias("id1"), F.unhex("id2").alias("id2"), "detector")
     names = ["minhash", "simhash", "sa"]
     legacy = union_candidates(mk(rows1), mk(rows2), mk(rows3)).toPandas()
-    packed = decode_detector_mask(
+    packed = decode_mask_col(
         union_candidates_bitmask(
-            [mkbin(rows1), mkbin(rows2), mkbin(rows3)], names,
-            hex_ids=True, as_mask=True, packed_ids=True),
+            [mkbin(rows1), mkbin(rows2), mkbin(rows3)], names),
         names,
     ).toPandas()
     key = lambda df: {  # noqa: E731
         (r.id1, r.id2): list(r.detectors) for r in df.itertuples()
     }
     assert key(packed) == key(legacy)
+    # collapses cross-band duplicates; provenance arrays sorted by name
+    assert key(packed)[(h("0a"), h("1b"))] == ["minhash", "sa", "simhash"]
 
 
 def test_binary_id_order_matches_hex_string_order(spark):

@@ -1,11 +1,12 @@
 """Round-6 one-pass text verification: path equality + plan shape.
 
-The pipeline now derives text_verified in ONE job via either the
-worker-side lookup kernel (small feature tables) or the fused join form
-(scale fallback); the original two-stage persist-metrics derivation
-remains the materialized-text_metrics debug path.  All three must emit
-BIT-IDENTICAL rows -- est float-bit equality included -- and the lookup
-plan must stay join- and exchange-free with exactly one Python crossing.
+The pipeline derives text_verified in ONE job via either the worker-side
+lookup kernel (small feature tables) or the fused join form (scale
+fallback).  The two must emit BIT-IDENTICAL rows -- est float-bit
+equality included -- and each must match the numpy reference
+(``oracle.text_verified``, the "legacy" derivation below) at
+test_spark_parity's tolerances; the lookup plan must stay join- and
+exchange-free with exactly one Python crossing.
 """
 
 from __future__ import annotations
@@ -14,84 +15,82 @@ import numpy as np
 import pytest
 
 from locality_sensitive_hashing_spark.operators.candidates import (
-    decode_detector_mask,
+    decode_mask_col,
 )
 from locality_sensitive_hashing_spark.operators.verify import (
-    text_pair_metrics,
     text_verified_fused,
     text_verified_lookup,
-    verify_text_pairs,
 )
+from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
 COLS = ["tk1", "tk2", "detectors", "est_jaccard", "hamming", "lcs", "text_ok"]
-CAND_NAMES = ["minhash", "simhash", "sa"]
-
-
-def _read_candidates(io):
-    # round 6: the committed stage stores the raw bitmask; decode exactly
-    # as the pipeline does on read-back
-    return decode_detector_mask(io.read("candidates"), CAND_NAMES)
 
 
 def _frame(df):
-    pdf = df.toPandas()
+    pdf = decode_mask_col(df, TEXT_DETECTORS).toPandas()
     pdf["detectors"] = pdf["detectors"].map(tuple)
     return pdf.sort_values(["tk1", "tk2"]).reset_index(drop=True)[COLS]
 
 
+def _assert_matches_oracle(got, exp):
+    """test_spark_parity::test_text_verified_exact's tolerances, plus
+    provenance."""
+    exp = exp.assign(detectors=exp["detectors"].map(tuple))
+    assert set(zip(got.tk1, got.tk2)) == set(zip(exp.tk1, exp.tk2))
+    m = got.merge(exp, on=["tk1", "tk2"], suffixes=("_g", "_e"))
+    assert len(m) == len(got)
+    assert (abs(m.est_jaccard_g - m.est_jaccard_e) < 1e-12).all()
+    for c in ("detectors", "hamming", "lcs", "text_ok"):
+        assert list(m[f"{c}_g"]) == list(m[f"{c}_e"]), f"{c} mismatch"
+
+
 @pytest.fixture(scope="module")
-def three_paths(spark, pipeline_run, cfg):
+def three_paths(spark, pipeline_run, corpus, cfg):
+    """(lookup, fused, legacy): the two Spark paths over the committed
+    mask-form candidates, and the numpy reference rows."""
     io, _, _ = pipeline_run
-    cands = _read_candidates(io)
-    sigs = io.read("signatures")
-    fps = io.read("fingerprints")
+    _, _, oracle = corpus
+    cands = io.read("candidates")
     lookup = _frame(text_verified_lookup(
-        cands, io.data_path("signatures"), io.data_path("fingerprints"), cfg))
-    fused = _frame(text_verified_fused(cands, sigs, fps, cfg))
-    tm = text_pair_metrics(cands, sigs, fps).persist()
-    tm.count()
-    legacy = _frame(verify_text_pairs(tm, sigs, cfg))
-    tm.unpersist()
-    return lookup, fused, legacy
+        cands, io.data_path("signatures"), io.data_path("fingerprints"),
+        cfg, names=TEXT_DETECTORS))
+    fused = _frame(text_verified_fused(
+        cands, io.read("signatures"), io.read("fingerprints"), cfg,
+        names=TEXT_DETECTORS))
+    return lookup, fused, oracle.text_verified
 
 
 def test_lookup_path_equals_legacy(three_paths):
-    lookup, _, legacy = three_paths
-    assert len(lookup) == len(legacy)
+    lookup, fused, legacy = three_paths
+    _assert_matches_oracle(lookup, legacy)
+    # lookup vs fused: same rows, float BIT equality (same (B, H) compare)
+    assert len(lookup) == len(fused)
     for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(lookup[c]) == list(legacy[c]), f"{c} mismatch"
-    # float BIT equality, not approximate: same (B, H) numpy compare
+        assert list(lookup[c]) == list(fused[c]), f"{c} mismatch"
     assert (
         lookup.est_jaccard.to_numpy().view(np.int64)
-        == legacy.est_jaccard.to_numpy().view(np.int64)
+        == fused.est_jaccard.to_numpy().view(np.int64)
     ).all()
 
 
 def test_fused_path_equals_legacy(three_paths):
     _, fused, legacy = three_paths
-    assert len(fused) == len(legacy)
-    for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(fused[c]) == list(legacy[c]), f"{c} mismatch"
-    assert (
-        fused.est_jaccard.to_numpy().view(np.int64)
-        == legacy.est_jaccard.to_numpy().view(np.int64)
-    ).all()
+    _assert_matches_oracle(fused, legacy)
 
 
 def test_committed_stage_used_lookup_or_fused(pipeline_run):
-    """The default pipeline run derives text_verified without the
-    metrics persist: text_metrics stays a passthrough and no
-    text_metrics_cache aux wall is recorded."""
+    """The default pipeline run derives text_verified without a metrics
+    persist: no text_metrics stage and no text_metrics_cache aux wall."""
     _, pipe, _ = pipeline_run
-    assert "text_metrics" in pipe.passthrough_stages
+    assert "text_metrics" not in pipe.executed_stages
     assert "text_metrics_cache" not in pipe.aux_walls
 
 
 def test_lookup_plan_zero_joins_one_python_crossing(spark, pipeline_run, cfg):
     io, _, _ = pipeline_run
-    cands = _read_candidates(io)
     plan = text_verified_lookup(
-        cands, io.data_path("signatures"), io.data_path("fingerprints"), cfg
+        io.read("candidates"), io.data_path("signatures"),
+        io.data_path("fingerprints"), cfg, names=TEXT_DETECTORS,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "Exchange" not in plan
@@ -103,8 +102,6 @@ def test_lookup_gate_falls_back_on_size(spark, pipeline_run, cfg,
                                         monkeypatch):
     """SPARK_LSH_TEXT_LOOKUP_MAX_BYTES=0 disables the lookup path; the
     pipeline then plans the fused join form (still one-pass)."""
-    import locality_sensitive_hashing_spark.plans.pipeline as P
-
     io, pipe, _ = pipeline_run
     monkeypatch.setenv("SPARK_LSH_TEXT_LOOKUP_MAX_BYTES", "0")
     assert pipe._text_lookup_dirs() is None
@@ -114,39 +111,28 @@ def test_lookup_gate_falls_back_on_size(spark, pipeline_run, cfg,
 
 def test_mask_schema_commit_decodes_to_identical_rows(spark, pipeline_run,
                                                       cfg):
-    """Round 6: mask-form candidates in -> mask-form text_verified out
-    (the commit sheds the 10M-row array<string> encode); decoding the
-    mask yields BIT-IDENTICAL rows to the array path, lookup and fused
-    alike."""
-    from locality_sensitive_hashing_spark.operators.candidates import (
-        decode_mask_col,
-    )
-
+    """Mask-form candidates in -> mask-form text_verified out (the commit
+    sheds the 10M-row array<string> encode): each output pair carries
+    its candidate's mask unchanged, and the committed stage decodes to
+    BIT-IDENTICAL rows to a fresh lookup derivation."""
     io, _, _ = pipeline_run
     cand_raw = io.read("candidates")
-    if "detectors_mask" not in cand_raw.columns:
-        pytest.skip("pre-mask candidates commit")
-    cands = _read_candidates(io)
-    sigs, fps = io.read("signatures"), io.read("fingerprints")
-    sig_dir = io.data_path("signatures")
-    fp_dir = io.data_path("fingerprints")
-
-    arr = _frame(text_verified_lookup(cands, sig_dir, fp_dir, cfg))
+    assert "detectors_mask" in cand_raw.columns
     masked = text_verified_lookup(
-        cand_raw, sig_dir, fp_dir, cfg, names=CAND_NAMES)
+        cand_raw, io.data_path("signatures"), io.data_path("fingerprints"),
+        cfg, names=TEXT_DETECTORS)
     assert "detectors_mask" in masked.columns  # the commit-form schema
-    got = _frame(decode_mask_col(masked, CAND_NAMES))
-    assert list(got.columns) == list(arr.columns)
-    for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(got[c]) == list(arr[c]), f"{c} mismatch (lookup)"
-    assert (got.est_jaccard.to_numpy().view(np.int64)
-            == arr.est_jaccard.to_numpy().view(np.int64)).all()
+    cand = {(r.id1, r.id2): r.detectors_mask
+            for r in cand_raw.toPandas().itertuples()}
+    out = masked.select("tk1", "tk2", "detectors_mask").toPandas()
+    assert len(out) == len(cand)
+    assert all(cand[(r.tk1, r.tk2)] == r.detectors_mask
+               for r in out.itertuples())
 
-    arr_f = _frame(text_verified_fused(cands, sigs, fps, cfg))
-    got_f = _frame(decode_mask_col(
-        text_verified_fused(cand_raw, sigs, fps, cfg, names=CAND_NAMES),
-        CAND_NAMES))
+    got = _frame(io.read("text_verified"))
+    exp = _frame(masked)
+    assert list(got.columns) == list(exp.columns)
     for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(got_f[c]) == list(arr_f[c]), f"{c} mismatch (fused)"
-    assert (got_f.est_jaccard.to_numpy().view(np.int64)
-            == arr_f.est_jaccard.to_numpy().view(np.int64)).all()
+        assert list(got[c]) == list(exp[c]), f"{c} mismatch"
+    assert (got.est_jaccard.to_numpy().view(np.int64)
+            == exp.est_jaccard.to_numpy().view(np.int64)).all()
