@@ -60,9 +60,11 @@ class Config:
     snr_db: float = 30.0
     # connected components
     cc_max_iters: int = 25
-    # cluster-mode CC hardening: reliable checkpoint() (survives executor
+    # cluster-mode hardening: reliable checkpoint() (survives executor
     # loss; needs a fault-tolerant checkpoint dir) instead of
-    # localCheckpoint() (executor-local blocks -- fine in local mode)
+    # localCheckpoint() (executor-local blocks -- fine in local mode) for
+    # the CC rounds, cluster_delta's inputs and expand_and_verify's
+    # screened rep pairs (operators/connected_components._checkpointer)
     cc_reliable_checkpoint: bool = False
     # partitioning knobs (sized for local[32] tests; scale-up notes in
     # plans/pipeline.py docstrings)

@@ -31,11 +31,12 @@ launching a second join-plus-count job per iteration.
 
 Checkpoint mode: ``localCheckpoint`` (default) stores blocks on executors
 -- cheapest, but a lost executor on a real cluster loses blocks and fails
-the job.  ``cfg.cc_reliable_checkpoint=True`` switches every round (and
-:func:`cluster_delta`'s two input materializations) to reliable
+the job.  ``cfg.cc_reliable_checkpoint=True`` switches every round,
+:func:`cluster_delta`'s two input materializations and the screened
+rep-pair frame of ``verify.expand_and_verify`` to reliable
 ``checkpoint()`` into the SparkContext checkpoint dir (set it to
 HDFS/S3 on a cluster; a temp dir is provisioned automatically in local
-mode).  Execution-only knob: results are identical (pinned by test).
+mode).  Execution-only knob: results are identical (pinned by tests).
 """
 
 from __future__ import annotations

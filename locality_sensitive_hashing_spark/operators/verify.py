@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 
 from locality_sensitive_hashing_spark.config import Config
 from locality_sensitive_hashing_spark.operators.audio_verify import pcm_compare_udf
+from locality_sensitive_hashing_spark.operators.connected_components import (
+    _checkpointer,
+)
 from locality_sensitive_hashing_spark.operators.simhash import hamming_distance
 from locality_sensitive_hashing_spark.operators.textgroup import (
     within_group_rep_pairs,
@@ -327,12 +330,13 @@ def text_verified_fused(
     """One-pass text_verified, join form (scale fallback).
 
     Same single-job fusion and mask-schema input/output as
-    :func:`text_verified_lookup` but the features arrive through the
-    bucketed signature/fingerprint joins, so it scales to corpora whose
-    per-text tables exceed worker memory.  Signatures and fingerprints
-    are pre-joined into ONE per-text feature table (both commit
-    bucketed+sorted by text_key, so that join is exchange-free) and the
-    pair table joins it once per side.  Norms ride the joins gated to
+    :func:`text_verified_lookup` but the features arrive through
+    signature/fingerprint joins, so it scales to corpora whose per-text
+    tables exceed worker memory.  Signatures and fingerprints are
+    pre-joined into ONE per-text feature table and the pair table joins
+    it once per side.  The committed tables are plain parquet, so each
+    is exchanged on text_key exactly once; its second use (the other
+    pair side) reuses that exchange.  Norms ride the joins gated to
     the rows that can need them (norm1 to 'sa'-detector pairs -- known BEFORE any join -- and norm2 to
     saflag rows map-side after the second join), so the second pair
     exchange carries norm bytes only for the SA-candidate fraction and
@@ -655,11 +659,13 @@ def expand_and_verify(
     # interpreted digest HOF) executes TWICE in the verified job -- and a
     # forced exchange cannot be reused here because each branch's filter
     # pushes below the repartition, de-canonicalizing the two subtrees
-    # (measured: repartition("id1","id2") saved nothing).  localCheckpoint
+    # (measured: repartition("id1","id2") saved nothing).  A checkpoint
     # runs the screen once and both branches read the bounded pair frame
     # (no payload columns; MEMORY_AND_DISK, spills rather than OOMs) --
     # measured -13% on the stage with the checkpoint job included.
-    screened = screened.localCheckpoint()
+    # localCheckpoint by default; cfg.cc_reliable_checkpoint makes it a
+    # reliable checkpoint() that survives executor loss on a cluster.
+    screened = _checkpointer(screened, cfg)
     survivors = _audio_verdict(screened.where("_maybe_dup"), clips).withColumn(
         "is_dup", F.col("allclose") & (F.col("snr_db") >= snr_thresh)
     )

@@ -308,7 +308,7 @@ class DedupPipeline:
         # memory, the pairs cross the Python boundary as (id1, id2, flag)
         # ONLY and every feature comes from a worker-side store read
         # straight from the stage commit (text_verified_lookup, zero
-        # joins); past the size gate the features ride the bucketed joins
+        # joins); past the size gate the features ride shuffle joins
         # (text_verified_fused).  Both emit bit-identical rows
         # (test-pinned).  Mask-form candidates in, mask-form commit out
         # (the array<string> encode cost ~2 s of the 10M-row stage

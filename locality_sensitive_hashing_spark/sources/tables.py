@@ -27,16 +27,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-# stage tables whose committed layout is BUCKETED (hash-clustered + sorted
-# by the id column, one file per bucket): every downstream join on that id
-# (pair-metric joins s1/s2, norm joins n1/n2) then scans co-partitioned,
-# pre-sorted buckets instead of re-shuffling the table per join --
-# SURVEY.md section 4.3. Keys: table -> (bucket column, n buckets).
-DEFAULT_BUCKET_SPEC: dict[str, tuple[str, int]] = {
-    "signatures": ("text_key", 32),
-    "fingerprints": ("text_key", 32),
-}
-
 CLIPS_SCHEMA = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, "
     "codec string, transcript string"
@@ -78,7 +68,6 @@ class TableIO:
         self,
         spark: SparkSession,
         root: str,
-        bucket_spec: dict[str, tuple[str, int]] | None = None,
         iceberg_catalog: str | None = None,
     ):
         """``iceberg_catalog``: name of a configured Iceberg catalog
@@ -90,9 +79,6 @@ class TableIO:
         protocol when the jar is absent (this sandbox)."""
         self.spark = spark
         self.root = root
-        self.bucket_spec = (
-            DEFAULT_BUCKET_SPEC if bucket_spec is None else bucket_spec
-        )
         self.iceberg_catalog = (
             iceberg_catalog
             if iceberg_catalog and _iceberg_available(spark)
@@ -156,59 +142,20 @@ class TableIO:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _ident(self, table: str) -> str:
-        """Catalog identifier for a bucketed table, unique per workdir."""
-        h = hashlib.sha1(self.root.encode()).hexdigest()[:10]
-        return f"lsh_{h}_{table}"
-
     def _iceberg_ident(self, table: str) -> str:
         h = hashlib.sha1(self.root.encode()).hexdigest()[:10]
         return f"{self.iceberg_catalog}.lsh_{h}.{table}"
-
-    def _register_bucketed(self, table: str, sch=None) -> None:
-        """(Re)create the catalog entry for a bucketed table's files.
-
-        Bucket layout lives in the catalog, not in parquet files, so a
-        fresh session resuming a workdir re-issues the DDL; the bucket ids
-        encoded in the committed file names make this sound.  ``write``
-        passes the schema it just committed; the fresh-session resume
-        path infers it from the files, falling back to the
-        manifest-recorded schema for a zero-row table (an empty corpus
-        commits an empty directory parquet inference cannot type).
-        """
-        from pyspark.sql import types as T
-
-        col, n = self.bucket_spec[table]
-        path = self._path(table)
-        if sch is None:
-            try:
-                sch = self.spark.read.parquet(path).schema
-            except Exception:
-                snaps = [
-                    s for s in self._load_manifest()["snapshots"]
-                    if s["table"] == table and not s.get("append")
-                ]
-                if not snaps:
-                    raise
-                sch = T.StructType.fromDDL(snaps[-1]["schema"])
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields)
-        ident = self._ident(table)
-        self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        self.spark.sql(
-            f"CREATE TABLE {ident} ({cols}) USING PARQUET "
-            f"CLUSTERED BY (`{col}`) SORTED BY (`{col}`) INTO {n} BUCKETS "
-            f"LOCATION '{path}'"
-        )
 
     def write(self, df: DataFrame, table: str, config_id: str,
               mode: str = "overwrite") -> None:
         """Atomically (re)place `table` with `df`.
 
-        Tables in ``bucket_spec`` commit hash-bucketed + per-bucket sorted
-        (repartitioned to one file per bucket so scans report sorted
-        output): the same write-to-tmp / rename / register protocol keeps
-        the commit atomic -- the temp CATALOG entry from saveAsTable is
-        dropped and the final one re-created against the renamed path.
+        Every table commits as plain parquet: write to a tmp directory,
+        rename into place, append the manifest entry.  No table is
+        pre-partitioned or sorted at write time: a join that needs a
+        layout (``text_verified_fused`` past the lookup gate) shuffles
+        the table when it reads it, so only the path that uses the
+        layout pays for it.
 
         Row counts are NOT recomputed here -- the metrics stage (O23)
         already aggregates per-partition counts over the written output;
@@ -216,13 +163,7 @@ class TableIO:
         """
         if self.iceberg_catalog:
             ident = self._iceberg_ident(table)
-            w = df.writeTo(ident).using("iceberg")
-            if table in self.bucket_spec:
-                from pyspark.sql.functions import bucket as F_bucket
-
-                col, n = self.bucket_spec[table]
-                w = w.partitionedBy(F_bucket(n, col))
-            w.createOrReplace()  # atomic Iceberg snapshot swap
+            df.writeTo(ident).using("iceberg").createOrReplace()  # atomic swap
             self._append_snapshot({
                 "table": table, "config_id": config_id, "ts": time.time(),
                 "schema": df.schema.simpleString(), "iceberg": ident,
@@ -230,26 +171,10 @@ class TableIO:
             return
         final = self._path(table)
         tmp = f"{final}.__tmp_{int(time.time() * 1000)}"
-        if table in self.bucket_spec:
-            col, n = self.bucket_spec[table]
-            tmp_ident = self._ident(table) + "_tmp"
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")
-            (
-                df.repartition(n, col)
-                .write.mode("overwrite")
-                .bucketBy(n, col)
-                .sortBy(col)
-                .option("path", tmp)
-                .saveAsTable(tmp_ident)
-            )
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")  # keeps files
-        else:
-            df.write.mode("overwrite").parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        if table in self.bucket_spec:
-            self._register_bucketed(table, sch=df.schema)
         self._append_snapshot(
             {
                 "table": table,
@@ -283,13 +208,11 @@ class TableIO:
         )
 
     def read(self, table: str) -> DataFrame:
+        """A committed table: a path scan of its parquet directory (or the
+        Iceberg table).  Nothing is registered in the session catalog, so
+        a fresh session resumes a workdir by reading the same paths."""
         if self.iceberg_catalog:
             return self.spark.table(self._iceberg_ident(table))
-        if table in self.bucket_spec:
-            ident = self._ident(table)
-            if not self.spark.catalog.tableExists(ident):
-                self._register_bucketed(table)  # fresh-session resume
-            return self.spark.table(ident)
         return self.spark.read.parquet(self._path(table))
 
     def exists(self, table: str) -> bool:

@@ -65,6 +65,47 @@ def test_reliable_checkpoint_identical(spark, cfg):
     assert dict(zip(g.clip_id, g.cluster_id))["c"] == "a"
 
 
+def test_reliable_checkpoint_verify_identical(
+        spark, cfg, clips_df, pipeline_run, monkeypatch):
+    """The switch also covers expand_and_verify's screened rep-pair
+    materialization: over the pipeline's committed inputs it takes no
+    localCheckpoint under cc_reliable_checkpoint=True and emits the same
+    rows as the default (and as the committed verified stage)."""
+    from dataclasses import replace
+
+    from locality_sensitive_hashing_spark.operators.candidates import (
+        decode_mask_col,
+    )
+    from locality_sensitive_hashing_spark.operators.textgroup import chain_edges
+    from locality_sensitive_hashing_spark.operators.verify import (
+        expand_and_verify,
+    )
+    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
+
+    io, _, _ = pipeline_run
+
+    def rows(c):
+        df = expand_and_verify(
+            decode_mask_col(io.read("text_verified"), TEXT_DETECTORS),
+            io.read("audio_classes"), chain_edges(io.read("keyed")),
+            clips_df, c,
+        )
+        return sorted(map(repr, df.collect()))
+
+    local_calls = []
+    frame_cls = type(clips_df)
+    orig = frame_cls.localCheckpoint
+    monkeypatch.setattr(
+        frame_cls, "localCheckpoint",
+        lambda self, *a, **k: local_calls.append(1) or orig(self, *a, **k),
+    )
+    got = rows(replace(cfg, cc_reliable_checkpoint=True))
+    assert not local_calls
+    assert got == rows(cfg)
+    assert local_calls  # the default keeps localCheckpoint
+    assert got == sorted(map(repr, io.read("verified").collect()))
+
+
 def test_long_path_converges(spark, cfg):
     """Path of 12 nodes: needs several propagation rounds (doubling via
     min-relabel still converges under the iteration cap)."""

@@ -8,6 +8,9 @@ plan shape fails CI, not a profiler session three rounds later.
 
 from __future__ import annotations
 
+import os
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -51,47 +54,84 @@ def test_filter_pushdown_to_scan(spark, clips_parquet):
     assert "PushedFilters: [IsNotNull(sr_hz), EqualTo(sr_hz,16000)]" in plan, plan
 
 
-def test_bucketed_signatures_join_without_exchange(spark, pipeline_run, cfg):
-    """SURVEY section 4.3: the committed signatures table is bucketed +
-    sorted by text_key, so the signatures side of the pair-metric joins
-    scans co-partitioned buckets with NO shuffle exchange (forced to SMJ
-    by disabling broadcast for the check)."""
+def _plan_tree(plan: str) -> list[tuple[int, str, int]]:
+    """(depth, node name, operator id) per line of a formatted plan's
+    tree; a node's parent is the nearest earlier line of smaller depth."""
+    out = []
+    for ln in plan.split("\n\n", 1)[0].splitlines()[1:]:
+        m = re.match(r"^([\s:+-]*)(?:\* )?(.+?)\s*\((\d+)\)$", ln)
+        out.append((len(m.group(1)), m.group(2), int(m.group(3))))
+    return out
+
+
+def _scan_locations(plan: str) -> dict[int, str]:
+    """operator id -> scanned path, for every parquet scan in the plan."""
+    out = {}
+    for block in plan.split("\n\n")[1:]:
+        m = re.match(r"\((\d+)\) Scan parquet", block.strip())
+        loc = re.search(r"Location: \w+ \[(.*?)\]", block)
+        if m and loc:
+            out[int(m.group(1))] = loc.group(1)
+    return out
+
+
+def test_committed_feature_tables_are_path_scans(spark, pipeline_run):
+    """signatures/fingerprints commit as plain parquet and read back as
+    path scans: no bucketed scan, no session-catalog table behind them,
+    and the pipeline run leaves no lsh_* table in the catalog."""
     io, _, _ = pipeline_run
-    sigs = io.read("signatures")
-    pairs = io.read("candidates").select(F.col("id1").alias("text_key"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(pairs.join(sigs, "text_key"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    import re
-
-    assert "SortMergeJoin" in plan, plan
-    # exactly ONE exchange: the pairs side; the bucketed signatures scan
-    # feeds the join directly (its Sort has no child Exchange)
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert "_signatures" in plan, plan  # catalog (bucketed) scan, not path scan
+    for table in ("signatures", "fingerprints"):
+        plan = _plan(io.read(table))
+        assert "Bucketed: true" not in plan, plan
+        assert "spark_catalog" not in plan, plan
+        assert list(_scan_locations(plan).values())[0].endswith(
+            os.sep + table), plan
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("lsh_")]
 
 
-def test_bucketed_feature_prejoin_no_exchange(spark, pipeline_run, cfg):
-    """text_verified_fused pre-joins signatures+fingerprints into one
-    per-text feature table; both commit bucketed+sorted by text_key with
-    the same bucket count, so that join is a co-partitioned SMJ with ZERO
-    exchanges (forced to SMJ by disabling broadcast for the check)."""
+def test_fused_text_verify_exchanges_each_feature_table_once(
+        spark, pipeline_run, cfg):
+    """Scale contract of text_verified_fused over the committed tables:
+    each feature table is scanned once and exchanged on text_key exactly
+    once between its scan and its join; the other pair side's join reads
+    the same table through a ReusedExchange (broadcast and AQE off, so
+    the plan is the shuffle form a corpus past the lookup gate gets)."""
+    from locality_sensitive_hashing_spark.operators.verify import (
+        text_verified_fused,
+    )
+    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
+
     io, _, _ = pipeline_run
-    sigs = io.read("signatures").select("text_key", "sig")
-    fps = io.read("fingerprints").select("text_key", "fingerprint")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    confs = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+             "spark.sql.adaptive.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
-        plan = _plan(sigs.join(fps, "text_key"))
+        plan = _plan(text_verified_fused(
+            io.read("candidates"), io.read("signatures"),
+            io.read("fingerprints"), cfg, names=TEXT_DETECTORS))
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    import re
-
-    assert "SortMergeJoin" in plan, plan
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    tree = _plan_tree(plan)
+    scans = _scan_locations(plan)
+    for table in ("signatures", "fingerprints"):
+        ids = [i for i, loc in scans.items() if loc.endswith(os.sep + table)]
+        assert len(ids) == 1, plan
+        pos = [n[2] for n in tree].index(ids[0])
+        depth, exchanges = tree[pos][0], []
+        for d, name, op in reversed(tree[:pos]):
+            if d >= depth:
+                continue
+            depth = d
+            if name == "SortMergeJoin Inner":
+                break
+            if name == "Exchange":
+                exchanges.append(op)
+        assert len(exchanges) == 1, plan
+        assert f"ReusedExchange [Reuses operator id: {exchanges[0]}]" in plan, plan
 
 
 def test_content_keys_single_scan_projection(spark, clips_parquet):

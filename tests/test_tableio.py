@@ -60,34 +60,16 @@ def test_iceberg_gating(spark, io):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_bucketed_write_read_overwrite_reregister(spark, io):
-    """Bucketed tables: committed via the same atomic tmp+rename protocol,
-    readable after a catalog wipe (fresh-session resume re-issues DDL),
-    and overwrite-able."""
-    io.bucket_spec = {"tb": ("x", 4)}
-    io.write(_df(spark, 20), "tb", "cfgA")
-    assert io.read("tb").count() == 20
-    spark.sql(f"DROP TABLE IF EXISTS {io._ident('tb')}")  # simulate new session
-    assert io.read("tb").count() == 20  # re-registered from committed files
-    io.write(_df(spark, 7), "tb", "cfgB")
-    assert io.read("tb").count() == 7
-    assert io.committed("tb", "cfgB") and not io.committed("tb", "cfgA")
-
-
-def test_bucketed_zero_row_write_and_resume(spark, io):
-    """An EMPTY corpus commits zero-row bucketed tables: registration
-    must not depend on parquet schema inference (no files to infer
-    from).  Write-time registration takes the schema from the written
-    DataFrame; fresh-session re-registration falls back to the
-    manifest-recorded schema."""
-    io.bucket_spec = {"tz": ("x", 4)}
-    io.write(spark.createDataFrame([], schema="x long"), "tz", "cfgA")
-    assert io.read("tz").count() == 0
-    assert io.committed("tz", "cfgA")
-    spark.sql(f"DROP TABLE IF EXISTS {io._ident('tz')}")  # new session
-    got = io.read("tz")
+def test_zero_row_commit_resumes_with_schema(spark, io):
+    """An EMPTY corpus commits zero-row stage tables; a fresh TableIO on
+    the same root (a resumed run in a new session) must still read them
+    back with their schema, so downstream stages can plan over them."""
+    io.write(spark.createDataFrame([], schema="x long, y string"), "tz", "cfgA")
+    fresh = TableIO(spark, io.root)
+    assert fresh.committed("tz", "cfgA")
+    got = fresh.read("tz")
     assert got.count() == 0
-    assert [f.name for f in got.schema.fields] == ["x"]
+    assert got.schema.simpleString() == "struct<x:bigint,y:string>"
 
 
 def test_empty_corpus_pipeline(spark, cfg):
