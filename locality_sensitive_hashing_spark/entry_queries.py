@@ -4081,9 +4081,8 @@ def q_detector_attribution(spark, sf_dir):
     from locality_sensitive_hashing_spark.operators.candidates import (
         decode_mask_col,
     )
-    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
-    tv = decode_mask_col(io.read("text_verified"), TEXT_DETECTORS)
+    tv = decode_mask_col(io.read("text_verified"))
     one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
     ex = tv.select(
         F.explode("detectors").alias("detector"),

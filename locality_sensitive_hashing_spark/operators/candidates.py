@@ -170,28 +170,29 @@ def union_candidates(*pair_dfs: DataFrame) -> DataFrame:
     )
 
 
-def detector_bits(names: list[str]) -> dict[str, int]:
+# the text-pair detectors, in the order their pair-sets enter the
+# candidates union; the committed candidates/text_verified tables store
+# provenance as a detector_bits mask over these names
+TEXT_DETECTORS = ("minhash", "simhash", "sa")
+
+
+def detector_bits() -> dict[str, int]:
     """The frozen name -> bit assignment of the bitmask union: one bit per
-    detector in sorted-name order."""
-    snames = sorted(set(names))
-    if len(snames) != len(names):
-        raise ValueError(f"duplicate detector names: {names}")
-    return {n: 1 << i for i, n in enumerate(snames)}
+    TEXT_DETECTORS name in sorted-name order."""
+    return {n: 1 << i for i, n in enumerate(sorted(TEXT_DETECTORS))}
 
 
-def mask_to_detectors(mask, names: list[str]):
+def mask_to_detectors(mask):
     """Column: decode a :func:`detector_bits` mask into the detectors
     array (sorted-name order == ``array_sort(collect_set(detector))``)."""
-    bit = detector_bits(names)
     return F.array_compact(F.array(*[
         F.when(mask.bitwiseAND(F.lit(b).cast("long")) != 0, F.lit(n))
-        for n, b in sorted(bit.items())
+        for n, b in sorted(detector_bits().items())
     ]))
 
 
 def decode_mask_col(
     df: DataFrame,
-    names: list[str],
     mask_col: str = "detectors_mask",
     out_col: str = "detectors",
 ) -> DataFrame:
@@ -201,19 +202,17 @@ def decode_mask_col(
     The read-back decode of the mask-schema stage commits (candidates and
     text_verified)."""
     cols = [
-        mask_to_detectors(F.col(c), names).alias(out_col) if c == mask_col
+        mask_to_detectors(F.col(c)).alias(out_col) if c == mask_col
         else c
         for c in df.columns
     ]
     return df.select(*cols)
 
 
-def union_candidates_bitmask(
-    pair_dfs: list[DataFrame], names: list[str]
-) -> DataFrame:
-    """(id1, id2, detectors_mask): :func:`union_candidates` for inputs
-    whose detector tag is KNOWN per input (the pipeline's case: one
-    constant tag per subtree) and whose ids are fixed-width binaries
+def union_candidates_bitmask(pair_dfs: list[DataFrame]) -> DataFrame:
+    """(id1, id2, detectors_mask): :func:`union_candidates` for one pair
+    frame per TEXT_DETECTORS name, in that order (the pipeline's case:
+    one constant tag per subtree), whose ids are fixed-width binaries
     (the pipeline unhexes its lowercase-hex text_keys once per
     blocking-table row).  Output ids are the lowercase hex strings.
 
@@ -235,13 +234,17 @@ def union_candidates_bitmask(
     test_union_bitmask_packed_binary_ids_equal_legacy).  A ``detector``
     column on the inputs is ignored.
     """
-    bit = detector_bits(names)
+    if len(pair_dfs) != len(TEXT_DETECTORS):
+        raise ValueError(
+            f"expected one pair frame per detector {TEXT_DETECTORS}, "
+            f"got {len(pair_dfs)}")
+    bit = detector_bits()
     parts = [
         df.select(
             F.concat("id1", "id2").alias("_k"),
             F.lit(bit[n]).cast("long").alias("_b"),
         )
-        for df, n in zip(pair_dfs, names)
+        for df, n in zip(pair_dfs, TEXT_DETECTORS)
     ]
     u = parts[0]
     for d in parts[1:]:

@@ -75,55 +75,6 @@ def lcs_udf(min_len: int):
     return compute
 
 
-def lcs_refuted_udf(min_len: int, jaccard_threshold: float):
-    """pandas UDF (sig1, sig2, norm1, norm2) -> exact LCS for rows whose
-    est-Jaccard is BELOW ``jaccard_threshold``; -1 (not computed -- no
-    suffix-array build) where the cheap screen already passed.
-
-    Kernel-level laziness. Keeping "refutation filter below the LCS
-    Project" in the PLAN is not stable: Catalyst pushes a column filter
-    back through the projection and ExtractPythonUDFs then collects the
-    est and lcs UDFs into ONE ArrowEvalPython below it, SA-building
-    every pair (caught by
-    tests/test_maintain_job.py::test_screened_edges_lcs_branch_is_lazy).
-    Fusing the refutation check into the kernel makes laziness a
-    property of the KERNEL, not of the optimizer: est is recomputed here
-    as the same one (B, H) batch compare as
-    :func:`..minhash.estimated_jaccard_udf` (bit-exact -- both are
-    (# equal)/H in float64 -- so the passed and refuted branches
-    partition the pair set identically), and ``lcs_at_least`` runs only
-    over the refuted rows. Hamming refutation stays JVM-side in the
-    caller (a plain ``bit_count`` predicate Catalyst can push freely).
-    """
-
-    @F.pandas_udf("long")
-    def compute(sig1: pd.Series, sig2: pd.Series,
-                t1: pd.Series, t2: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(sig1)
-        if n == 0:
-            return pd.Series([], dtype="int64")
-        a1, a2 = sig1.to_numpy(), sig2.to_numpy()
-        lens = np.fromiter((v.size for v in a1), dtype=np.int64, count=n)
-        est = np.empty(n, dtype=np.float64)
-        for h in np.unique(lens):
-            idx = np.nonzero(lens == h)[0]
-            s1 = np.vstack([a1[i] for i in idx])
-            s2 = np.vstack([a2[i] for i in idx])
-            est[idx] = (s1 == s2).mean(axis=1)
-        out = np.full(n, -1, dtype=np.int64)
-        # strict < so a NaN est (degenerate empty signature) skips the
-        # SA build, matching Spark SQL's NaN-is-largest comparison on
-        # the passed branch (NaN >= t is true there)
-        for i in np.nonzero(est < jaccard_threshold)[0]:
-            out[i] = H.lcs_at_least(
-                t1.iloc[i] or "", t2.iloc[i] or "", min_len)
-        return pd.Series(out)
-
-    return compute
-
-
 def sa_anchor_pairs(
     signatures: DataFrame,
     cfg: Config,

@@ -212,7 +212,7 @@ def _text_ok_expr(cfg: Config):
     )
 
 
-def _sa_flag(names: list[str]):
+def _sa_flag():
     """Column: the 'sa' bit of a mask-schema candidates frame.
 
     Candidates arrive in the committed mask form (id1, id2,
@@ -226,7 +226,7 @@ def _sa_flag(names: list[str]):
         detector_bits,
     )
 
-    bit = detector_bits(names)["sa"]
+    bit = detector_bits()["sa"]
     return F.col("detectors_mask").bitwiseAND(F.lit(bit).cast("long")) != 0
 
 
@@ -235,7 +235,6 @@ def text_verified_lookup(
     sig_dir: str,
     fp_dir: str,
     cfg: Config,
-    names: list[str],
 ) -> DataFrame:
     """One-pass text_verified via the worker-side lookup kernel.
 
@@ -245,14 +244,14 @@ def text_verified_lookup(
     memory; the pipeline gates on their on-disk size and falls back to
     :func:`text_verified_fused` (plans/pipeline.py).
 
-    ``candidates`` is mask-schema (``names`` are its detector_bits
-    names); the output is too: tk1, tk2, detectors_mask, est_jaccard,
-    hamming, lcs, text_ok -- see :func:`_sa_flag`.
+    ``candidates`` is mask-schema (a candidates.detector_bits mask); the
+    output is too: tk1, tk2, detectors_mask, est_jaccard, hamming, lcs,
+    text_ok -- see :func:`_sa_flag`.
     """
     kernel = pair_metrics_lookup_udf(sig_dir, fp_dir, cfg)
     return (
         candidates
-        .withColumn("_sa", _sa_flag(names))
+        .withColumn("_sa", _sa_flag())
         .withColumn("_m", kernel(F.col("id1"), F.col("id2"), F.col("_sa")))
         .select(F.col("id1").alias("tk1"), F.col("id2").alias("tk2"),
                 "detectors_mask", F.col("_m.est").alias("est_jaccard"),
@@ -265,15 +264,15 @@ def text_verified_lookup(
 def est_lcs_fused_udf(cfg: Config):
     """arrow_udf (sig1, sig2, norm1, norm2, saflag) -> struct(est, lcs).
 
-    The join-form fused kernel (scale fallback of the lookup kernel):
-    est is the identical (B, H) compare; lcs applies the lazy sentinel
-    rule with the est-refutation fused into the kernel -- the saflag
-    column carries the JVM-computed ``'sa' in detectors AND hamming > t``
-    gate, because a ``when(cond, udf)`` is hoisted into an eager
-    ArrowEvalPython by Catalyst (the documented hazard,
-    suffix_array.lcs_refuted_udf docstring).  Norm columns are gated to
-    flagged rows caller-side, so a null norm only ever coincides with
-    saflag=false.
+    The kernel of :func:`text_pair_verdict`: est is the identical (B, H)
+    compare as the lookup kernel; lcs applies the lazy sentinel rule
+    with the est-refutation fused into the kernel -- the saflag column
+    carries the JVM-computed ``lcs_ok AND hamming > t`` gate, because
+    Catalyst hoists a ``when(cond, udf)`` (or a refutation filter below
+    an lcs Project) into one eager ArrowEvalPython that would SA-build
+    every pair; fused here, laziness is a property of the kernel, not
+    of the optimizer.  Norm columns are gated to flagged rows
+    caller-side, so a null norm only ever coincides with saflag=false.
     """
     import numpy as np
 
@@ -320,30 +319,29 @@ def est_lcs_fused_udf(cfg: Config):
     return compute
 
 
-def text_verified_fused(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    fingerprints: DataFrame,
-    cfg: Config,
-    names: list[str],
-) -> DataFrame:
-    """One-pass text_verified, join form (scale fallback).
+def text_pair_verdict(pairs: DataFrame, feats: DataFrame, lcs_ok,
+                      cfg: Config) -> DataFrame:
+    """The text verdict of candidate pairs, in one pass: ``pairs``
+    (id1, id2, any passthrough columns) plus est_jaccard, hamming, lcs
+    and text_ok (est-Jaccard >= threshold OR Hamming <= t OR exact LCS
+    >= sa_min_len).  The batch pipeline's join form
+    (:func:`text_verified_fused`) and the maintenance loop's screen
+    (plans.maintenance.screened_edges) both decide the verdict here.
 
-    Same single-job fusion and mask-schema input/output as
-    :func:`text_verified_lookup` but the features arrive through
-    signature/fingerprint joins, so it scales to corpora whose per-text
-    tables exceed worker memory.  Signatures and fingerprints are
-    pre-joined into ONE per-text feature table and the pair table joins
-    it once per side.  The committed tables are plain parquet, so each
-    is exchanged on text_key exactly once; its second use (the other
-    pair side) reuses that exchange.  Norms ride the joins gated to
-    the rows that can need them (norm1 to 'sa'-detector pairs -- known BEFORE any join -- and norm2 to
-    saflag rows map-side after the second join), so the second pair
-    exchange carries norm bytes only for the SA-candidate fraction and
-    the Arrow boundary only for the refutable fraction.
+    ``feats`` has one row per text: (text_key, sig, norm, fingerprint);
+    the pair table joins it once per side.  ``lcs_ok`` is a boolean
+    Column over ``pairs`` marking the pairs whose LCS may decide the
+    verdict (the 'sa' candidates in the batch pipeline).  Hamming is a
+    JVM ``bit_count``; est and the lazy LCS are ONE ArrowEvalPython
+    (:func:`est_lcs_fused_udf`), whose exact LCS runs only for lcs_ok
+    pairs failing both cheap tests -- every other pair reports lcs = -1
+    (not computed), which cannot change text_ok.  Norms ride the joins
+    gated to the rows that can need them (norm1 to lcs_ok pairs -- known
+    BEFORE any join -- and norm2 to saflag rows map-side after the
+    second join), so the second pair exchange carries norm bytes only
+    for the lcs_ok fraction and the Arrow boundary only for the
+    refutable fraction.
     """
-    feats = signatures.select("text_key", "norm", "sig").join(
-        fingerprints.select("text_key", "fingerprint"), "text_key")
     g1 = feats.select(F.col("text_key").alias("id1"),
                       F.col("sig").alias("sig1"),
                       F.col("norm").alias("norm1"),
@@ -354,10 +352,10 @@ def text_verified_fused(
                       F.col("fingerprint").alias("fp2"))
     kernel = est_lcs_fused_udf(cfg)
     return (
-        candidates
-        .withColumn("_sa", _sa_flag(names))
+        pairs
+        .withColumn("_sa", lcs_ok)
         .join(g1, "id1")
-        # gate norm1 BEFORE the id2 exchange: non-SA pairs ship no norm
+        # gate norm1 BEFORE the id2 exchange: non-lcs_ok pairs ship no norm
         .withColumn("_n1", F.when(F.col("_sa"), F.col("norm1")))
         .drop("norm1")
         .join(g2, "id2")
@@ -370,11 +368,35 @@ def text_verified_fused(
         .withColumn("_el", kernel(F.col("sig1"), F.col("sig2"),
                                   F.col("_n1"), F.col("_n2"),
                                   F.col("_saflag")))
-        .select(F.col("id1").alias("tk1"), F.col("id2").alias("tk2"),
-                "detectors_mask", F.col("_el.est").alias("est_jaccard"),
+        .select(*pairs.columns, F.col("_el.est").alias("est_jaccard"),
                 "hamming", F.col("_el.lcs").alias("lcs"))
         .withColumn("text_ok", _text_ok_expr(cfg))
     )
+
+
+def text_verified_fused(
+    candidates: DataFrame,
+    signatures: DataFrame,
+    fingerprints: DataFrame,
+    cfg: Config,
+) -> DataFrame:
+    """One-pass text_verified, join form (scale fallback).
+
+    Same single-job fusion and mask-schema input/output as
+    :func:`text_verified_lookup` but the features arrive through
+    :func:`text_pair_verdict`'s joins, so it scales to corpora whose
+    per-text tables exceed worker memory.  Signatures and fingerprints
+    are pre-joined into ONE per-text feature table that the pair table
+    joins once per side.  The committed tables are plain parquet, so
+    each is exchanged on text_key exactly once; its second use (the
+    other pair side) reuses that exchange.  The LCS may decide the
+    verdict of 'sa'-detector pairs only (:func:`_sa_flag`).
+    """
+    feats = signatures.select("text_key", "norm", "sig").join(
+        fingerprints.select("text_key", "fingerprint"), "text_key")
+    return text_pair_verdict(candidates, feats, _sa_flag(), cfg).select(
+        F.col("id1").alias("tk1"), F.col("id2").alias("tk2"),
+        "detectors_mask", "est_jaccard", "hamming", "lcs", "text_ok")
 
 
 def _audio_verdict(pairs: DataFrame, clips: DataFrame) -> DataFrame:

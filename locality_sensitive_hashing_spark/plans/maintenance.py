@@ -200,8 +200,8 @@ def sa_pairs(cfg: Config, new_anchors: DataFrame,
     touches -- the incremental counterpart of sa_anchor_pairs.  Anchor
     candidacy is only safe together with its exact-LCS verify, which
     :func:`screened_edges` with ``lcs=True`` supplies (the same lazy
-    shared-substring term the batch pipeline's text_ok carries,
-    verify.py:105-149)."""
+    shared-substring term the batch pipeline's text_ok carries:
+    operators.verify.text_pair_verdict)."""
     from locality_sensitive_hashing_spark.operators.candidates import (
         incremental_pairs_from_blocks,
     )
@@ -247,18 +247,16 @@ def batch_pairs(cfg: Config, new_sigs: DataFrame, old_sigs: DataFrame,
 
 
 def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
-                   new_fps: DataFrame, old_fps: DataFrame, est, cfg: Config,
+                   new_fps: DataFrame, old_fps: DataFrame, cfg: Config,
                    lcs: bool = False) -> DataFrame:
-    """The text verdict screen over the candidate pairs: est-Jaccard >=
+    """The text verdict over the candidate pairs: the (id1, id2) rows
+    :func:`..operators.verify.text_pair_verdict` passes -- est-Jaccard >=
     threshold OR Hamming(fingerprints) <= t, plus -- when ``lcs=True``
-    (intake store carries the anchor table) -- the lazy exact-LCS term,
-    making this the batch pipeline's FULL text_ok (verify.py:142-146).
-    One Arrow screen + one JVM bit_count per pair; the suffix-array
-    build runs ONLY for pairs failing both cheap tests -- enforced
-    INSIDE the kernel (lcs_refuted_udf), because verify.py's
-    filter-below-Project discipline only survives when the cheap
-    metrics come from a materialized stage; in a single query Catalyst
-    re-fuses the UDFs (see the lcs branch below).
+    (intake store carries the anchor table) -- the lazy exact-LCS term
+    for any candidate pair, making this the batch pipeline's full
+    text_ok.  One Arrow pass (est + lazy LCS) and one JVM bit_count per
+    pair; the suffix-array build runs only for pairs failing both cheap
+    tests.
 
     ``pairs`` is batch-scale while the signature/fingerprint stores are
     corpus-scale, so joining them directly would shuffle the corpus.
@@ -267,20 +265,17 @@ def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
     scanned, never shuffled (the same shape cluster_delta uses for its
     label lookup). ``pairs`` must be materialized by the caller
     (localCheckpoint) since it feeds both the endpoint broadcast and
-    the final join.  The returned edges are a lazy plan the caller need
-    not materialize: the cluster operators read it once (module
-    docstring).  With ``lcs=True`` the joined pair/feature rows feed
-    both the cheap-pass and the LCS branch, so they are materialized
-    here, once, instead of running the 4-way join and the store
-    semi-joins per branch.
+    the verdict joins.  The returned edges are a lazy plan the caller
+    need not materialize: the cluster operators read it once (module
+    docstring).
     """
     from pyspark.sql import functions as F
 
-    from locality_sensitive_hashing_spark.operators.simhash import (
-        hamming_distance,
+    from locality_sensitive_hashing_spark.operators.verify import (
+        text_pair_verdict,
     )
 
-    eps = (
+    eps = F.broadcast(
         pairs.select(F.col("id1").alias("text_key"))
         .unionByName(pairs.select(F.col("id2").alias("text_key")))
         .distinct()
@@ -289,65 +284,20 @@ def screened_edges(pairs: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame,
     # contract), so a plain union is one-row-per-key already; the
     # broadcast endpoint semi-join cuts it to batch-scale before any
     # shuffle-side use
-    sig_cols = ["text_key", "sig"] + (["norm"] if lcs else [])
-    all_sigs = (
-        old_sigs.select(*sig_cols)
-        .unionByName(new_sigs.select(*sig_cols))
-        .join(F.broadcast(eps), "text_key")
+    sig_cols = ["text_key", "sig", "norm"]
+    feats = (
+        old_sigs.select(*sig_cols).unionByName(new_sigs.select(*sig_cols))
+        .join(eps, "text_key")
+        .join(
+            old_fps.select("text_key", "fingerprint")
+            .unionByName(new_fps.select("text_key", "fingerprint"))
+            .join(eps, "text_key"),
+            "text_key")
     )
-    all_fps = (
-        old_fps.select("text_key", "fingerprint")
-        .unionByName(new_fps.select("text_key", "fingerprint"))
-        .join(F.broadcast(eps), "text_key")
+    return (
+        text_pair_verdict(pairs, feats, F.lit(lcs), cfg)
+        .where("text_ok").select("id1", "id2")
     )
-    s1c = [F.col("text_key").alias("id1"), F.col("sig").alias("_s1")] + (
-        [F.col("norm").alias("_n1")] if lcs else [])
-    s2c = [F.col("text_key").alias("id2"), F.col("sig").alias("_s2")] + (
-        [F.col("norm").alias("_n2")] if lcs else [])
-    s1 = all_sigs.select(*s1c)
-    s2 = all_sigs.select(*s2c)
-    f1 = all_fps.select(
-        F.col("text_key").alias("id1"), F.col("fingerprint").alias("_f1"))
-    f2 = all_fps.select(
-        F.col("text_key").alias("id2"), F.col("fingerprint").alias("_f2"))
-    joined = pairs.join(s1, "id1").join(s2, "id2").join(f1, "id1").join(
-        f2, "id2")
-    if lcs:  # read by both union branches below
-        joined = joined.localCheckpoint()
-    cheap_ok = (
-        (est(F.col("_s1"), F.col("_s2")) >= cfg.jaccard_threshold)
-        | (hamming_distance(F.col("_f1"), F.col("_f2")) <= cfg.hamming_t)
-    )
-    passed = joined.where(cheap_ok).select("id1", "id2")
-    if not lcs:
-        return passed
-    # lazy LCS: suffix-array build only where the verdict depends on it.
-    # Plan-level separation (refutation filter below an lcs Project) is
-    # NOT stable -- Catalyst pushes a column filter back through the
-    # projection and ExtractPythonUDFs then fuses the est and lcs UDFs
-    # into ONE eager ArrowEvalPython -- so the est-refutation check is
-    # fused INTO the kernel (lcs_refuted_udf: same bit-exact (B, H) est
-    # compare, SA build only for est-refuted rows, -1 otherwise), while
-    # the Hamming refutation stays a JVM bit_count predicate Catalyst
-    # may push freely. Emission stays disjoint from `passed`: this
-    # branch requires ham > t AND est < threshold.
-    from locality_sensitive_hashing_spark.operators.suffix_array import (
-        lcs_refuted_udf,
-    )
-
-    lcs_fn = lcs_refuted_udf(cfg.sa_min_len, cfg.jaccard_threshold)
-    lcs_pass = (
-        joined.where(
-            hamming_distance(F.col("_f1"), F.col("_f2")) > cfg.hamming_t)
-        .select(
-            "id1", "id2",
-            lcs_fn(F.col("_s1"), F.col("_s2"),
-                   F.col("_n1"), F.col("_n2")).alias("_lcs"),
-        )
-        .where(F.col("_lcs") >= cfg.sa_min_len)
-        .select("id1", "id2")
-    )
-    return passed.unionByName(lcs_pass)
 
 
 def verified_edges(cfg: Config, new: dict, old: dict | None = None,
@@ -372,10 +322,6 @@ def verified_edges(cfg: Config, new: dict, old: dict | None = None,
     audio/gain pairs) are localCheckpointed here; the returned edges
     stay lazy.
     """
-    from locality_sensitive_hashing_spark.operators.minhash import (
-        estimated_jaccard_udf,
-    )
-
     if old is None:
         old = {t: df.limit(0) for t, df in new.items()}
         keyed_new = keyed_all if keyed_new is None else keyed_new
@@ -385,10 +331,10 @@ def verified_edges(cfg: Config, new: dict, old: dict | None = None,
     if lcs:
         pairs = pairs.unionByName(
             sa_pairs(cfg, new["anchors"], old["anchors"])).distinct()
-    pairs = pairs.localCheckpoint()  # endpoint broadcast + final join
+    pairs = pairs.localCheckpoint()  # endpoint broadcast + verdict joins
     edges = screened_edges(
         pairs, new["signatures"], old["signatures"], new["fingerprints"],
-        old["fingerprints"], estimated_jaccard_udf(), cfg, lcs=lcs)
+        old["fingerprints"], cfg, lcs=lcs)
     if "energy" in new:
         en, old_en = new["energy"], old["energy"]
         apairs = energy_pairs(cfg, en, old_en).localCheckpoint()

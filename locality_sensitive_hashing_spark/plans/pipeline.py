@@ -60,7 +60,6 @@ factor.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -109,19 +108,18 @@ COMMITTED_STAGES = frozenset({
     "candidates", "text_verified", "verified", "clusters",
 })
 
-# the text-pair detectors, in the order their pair-sets enter the
-# candidates union; the committed candidates/text_verified tables store
-# provenance as a detector_bits mask over these names
-TEXT_DETECTORS = ("minhash", "simhash", "sa")
+# on-disk size gate of the worker-side text lookup store: signatures +
+# fingerprints above it take the join form (DedupPipeline._text_lookup_dirs)
+TEXT_LOOKUP_MAX_BYTES = 256 << 20
 
 
 class DedupPipeline:
     """Runs the full near-duplicate pipeline over a clips DataFrame.
 
-    All five detectors (the three in TEXT_DETECTORS plus the audio
-    energy and gain-fingerprint axes) feed one verified-edge set; the
-    COMMITTED_STAGES commit to TableIO and every other stage stays lazy
-    and fuses into a downstream job.
+    All five detectors (the three in candidates.TEXT_DETECTORS plus the
+    audio energy and gain-fingerprint axes) feed one verified-edge set;
+    the COMMITTED_STAGES commit to TableIO and every other stage stays
+    lazy and fuses into a downstream job.
     """
 
     def __init__(
@@ -179,11 +177,10 @@ class DedupPipeline:
         Conditions: parquet-backed store (workers read the stage files
         directly; an Iceberg store hides files behind the catalog),
         signatures + fingerprints committed, and their combined on-disk
-        size under the gate -- worker RSS for the store is ~5x the disk
-        bytes (sig matrix + norms + memoized gram arrays), so the default
-        256 MiB gate bounds a worker at ~1.3 GiB.  Tunable via
-        SPARK_LSH_TEXT_LOOKUP_MAX_BYTES (0 disables the lookup path);
-        execution-only: both paths emit bit-identical rows (test-pinned).
+        size at most TEXT_LOOKUP_MAX_BYTES -- worker RSS for the store is
+        ~5x the disk bytes (sig matrix + norms + memoized gram arrays), so
+        the 256 MiB gate bounds a worker at ~1.3 GiB.  Execution-only:
+        both paths emit bit-identical rows (test-pinned).
         """
         cid = self.cfg.config_id
         if not (
@@ -195,13 +192,9 @@ class DedupPipeline:
         fp_dir = self.io.data_path("fingerprints")
         if sig_dir is None or fp_dir is None:
             return None
-        cap = int(os.environ.get(
-            "SPARK_LSH_TEXT_LOOKUP_MAX_BYTES", str(256 << 20)))
-        if cap <= 0:
-            return None
         total = self.io.data_bytes("signatures") + self.io.data_bytes(
             "fingerprints")
-        if total > cap:
+        if total > TEXT_LOOKUP_MAX_BYTES:
             return None
         return sig_dir, fp_dir
 
@@ -300,7 +293,7 @@ class DedupPipeline:
         # (operators/candidates.union_candidates_bitmask)
         candidates = self._stage(
             "candidates",
-            lambda: union_candidates_bitmask(cand_parts, TEXT_DETECTORS),
+            lambda: union_candidates_bitmask(cand_parts),
         )
         # -- text verification: metrics + lazy LCS + text_ok in ONE job --
         # Size-adaptive, mirroring guide sections 3.1/8: when the
@@ -316,16 +309,13 @@ class DedupPipeline:
         lookup_dirs = self._text_lookup_dirs()
         if lookup_dirs is not None:
             builder = lambda: text_verified_lookup(  # noqa: E731
-                candidates, *lookup_dirs, cfg, names=TEXT_DETECTORS
+                candidates, *lookup_dirs, cfg
             )
         else:
             builder = lambda: text_verified_fused(  # noqa: E731
                 candidates, signatures, fingerprints, cfg,
-                names=TEXT_DETECTORS,
             )
-        text_verified = decode_mask_col(
-            self._stage("text_verified", builder), TEXT_DETECTORS
-        )
+        text_verified = decode_mask_col(self._stage("text_verified", builder))
         verified = self._stage(
             "verified",
             lambda: expand_and_verify(

@@ -159,8 +159,11 @@ class TableIO:
 
         Row counts are NOT recomputed here -- the metrics stage (O23)
         already aggregates per-partition counts over the written output;
-        one scan instead of two.
+        one scan instead of two.  ``mode`` only accepts "overwrite"
+        (appends go through :meth:`append`).
         """
+        if mode != "overwrite":
+            raise ValueError(f"TableIO.write only overwrites; got mode={mode!r}")
         if self.iceberg_catalog:
             ident = self._iceberg_ident(table)
             df.writeTo(ident).using("iceberg").createOrReplace()  # atomic swap

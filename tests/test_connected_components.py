@@ -80,13 +80,12 @@ def test_reliable_checkpoint_verify_identical(
     from locality_sensitive_hashing_spark.operators.verify import (
         expand_and_verify,
     )
-    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
     io, _, _ = pipeline_run
 
     def rows(c):
         df = expand_and_verify(
-            decode_mask_col(io.read("text_verified"), TEXT_DETECTORS),
+            decode_mask_col(io.read("text_verified")),
             io.read("audio_classes"), chain_edges(io.read("keyed")),
             clips_df, c,
         )

@@ -282,8 +282,8 @@ def test_screened_edges_corpus_restriction_broadcasts(spark):
     plan are the two hinted endpoint restrictions; the pair joins may
     sort-merge (batch-scale rows)."""
     sigs = spark.createDataFrame(
-        [("a", [1, 2]), ("b", [1, 3]), ("c", [9, 9])],
-        "text_key string, sig array<int>",
+        [("a", [1, 2], "alpha"), ("b", [1, 3], "beta"), ("c", [9, 9], "gamma")],
+        "text_key string, sig array<int>, norm string",
     )
     fps = spark.createDataFrame(
         [("a", 5), ("b", 5), ("c", 1024)], "text_key string, fingerprint long"
@@ -291,12 +291,11 @@ def test_screened_edges_corpus_restriction_broadcasts(spark):
     pairs = spark.createDataFrame(
         [("a", "b")], "id1 string, id2 string"
     ).localCheckpoint()
-    est = estimated_jaccard_udf()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         edges = screened_edges(
-            pairs, sigs.limit(0), sigs, fps.limit(0), fps, est, CFG
+            pairs, sigs.limit(0), sigs, fps.limit(0), fps, CFG
         )
         plan = edges._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -313,15 +312,13 @@ def test_screened_edges_corpus_restriction_broadcasts(spark):
 def test_screened_edges_lcs_branch_is_lazy(spark):
     """Laziness contract of the substring term: with lcs=True the exact
     LCS (suffix-array build) must evaluate ONLY for pairs failing both
-    cheap tests. Plan-level separation is NOT stable -- an earlier
-    revision kept the refutation filter "below the lcs Project" and
-    Catalyst pushed the filter back through the projection, fusing est
-    and lcs into ONE ArrowEvalPython that SA-built every pair (this test
-    caught it) -- so the est refutation lives INSIDE the kernel
-    (lcs_refuted_udf) and the Hamming refutation is a JVM bit_count
-    predicate. Observable plan shape: exactly TWO ArrowEvalPython nodes
-    (est on the passed branch, the fused lazy kernel on the lcs branch),
-    no row-at-a-time Python, Hamming still JVM-side on both branches."""
+    cheap tests. The screen is verify.text_pair_verdict, so the plan has
+    exactly ONE ArrowEvalPython -- the fused est + lazy-LCS kernel over
+    (sig1, sig2, _n1, _n2, _saflag), whose saflag carries the JVM
+    Hamming refutation and whose est refutation runs inside the kernel
+    (a refutation filter below an lcs Project is not stable: Catalyst
+    fuses it back into one eager Python eval) -- no row-at-a-time
+    Python, Hamming a JVM bit_count."""
     import re
 
     shared = "the quick brown fox jumps over the lazy dog tonight"
@@ -341,50 +338,56 @@ def test_screened_edges_lcs_branch_is_lazy(spark):
     pairs = spark.createDataFrame(
         [("a", "b"), ("c", "d")], "id1 string, id2 string"
     ).localCheckpoint()
-    est = estimated_jaccard_udf()
     edges = screened_edges(
-        pairs, sigs.limit(0), sigs, fps.limit(0), fps, est, CFG, lcs=True
+        pairs, sigs.limit(0), sigs, fps.limit(0), fps, CFG, lcs=True
     )
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan, plan  # never row-at-a-time
-    assert len(re.findall(r"ArrowEvalPython", plan)) == 2, plan
-    # the lcs-branch eval is the FUSED 4-arg kernel (sig + norm
-    # carriers), not a bare 2-arg lcs whose refutation Catalyst could
-    # have optimized away
-    assert re.search(r"ArrowEvalPython \[compute\(_s1#\d+, _s2#\d+, _n1", plan), plan
-    assert "bit_count" in plan, plan  # hamming stayed JVM on both branches
+    assert len(re.findall(r"ArrowEvalPython", plan)) == 1, plan
+    # the one eval is the FUSED 5-arg kernel: sigs, the gated norm
+    # carriers (_n1; _n2 = norm2 gated by saflag, inlined by Catalyst)
+    # and _saflag, the JVM Hamming refutation
+    assert re.search(
+        r"ArrowEvalPython \[compute\(sig1#\d+, sig2#\d+, _n1#\d+, "
+        r"CASE WHEN \(bit_count\(.*\) THEN norm2#\d+ END, "
+        rf"\(bit_count\(.*\) > {CFG.hamming_t}\)\)#", plan), plan
+    assert "bit_count" in plan, plan  # hamming stayed JVM
     # (a,b) passes the cheap screen (identical sigs), (c,d) fails both
     # (disjoint sigs, Hamming 40 > t) and merges only via LCS >= 32
     got = sorted((r.id1, r.id2) for r in edges.collect())
     assert got == [("a", "b"), ("c", "d")], got
 
 
-def test_lcs_refuted_kernel_skips_sa_when_est_passes(spark):
-    """The kernel-level laziness itself: rows whose est-Jaccard passes
-    the threshold return -1 WITHOUT computing the (present) long common
-    substring; refuted rows return the exact LCS. (Called directly with
-    Arrow-shaped inputs -- ndarray signature cells, as Spark hands the
-    kernel -- so the skip is observable without a plan in the way.)"""
-    import numpy as np
-    import pandas as pd
+def test_est_lcs_fused_kernel_skips_sa_unless_refuted(spark):
+    """The kernel-level laziness of verify.est_lcs_fused_udf itself: a
+    row returns the exact LCS only when its flag is set AND its
+    est-Jaccard is below the threshold; every other row returns -1
+    WITHOUT computing the (present) long common substring. (Called
+    directly with Arrow inputs, as Spark hands the kernel, so the skip
+    is observable without a plan in the way.)"""
+    import pyarrow as pa
 
-    from locality_sensitive_hashing_spark.operators.suffix_array import (
-        lcs_refuted_udf,
+    from locality_sensitive_hashing_spark.operators.verify import (
+        est_lcs_fused_udf,
     )
 
     shared = "x" * 40
-    fn = lcs_refuted_udf(32, 0.5).func
-    sig = lambda *v: np.array(v, dtype=np.int64)  # noqa: E731
+    fn = est_lcs_fused_udf(CFG).func
+    same, other = [1, 2, 3, 4], [9, 9, 9, 9]
     out = fn(
-        pd.Series([sig(1, 2, 3, 4), sig(1, 2, 3, 4)]),
-        pd.Series([sig(1, 2, 3, 4), sig(9, 9, 9, 9)]),
-        pd.Series(["left " + shared, "left " + shared]),
-        pd.Series([shared + " right", shared + " right"]),
-    ).tolist()
+        pa.array([same, same, same], type=pa.list_(pa.int64())),
+        pa.array([same, other, other], type=pa.list_(pa.int64())),
+        pa.array(["left " + shared] * 3),
+        pa.array([shared + " right"] * 3),
+        pa.array([True, False, True]),
+    )
+    lcs = out.field("lcs").to_pylist()
     # row 0: est 1.0 >= 0.5 -> SA skipped despite the 40-char overlap;
-    # row 1: est 0.0 < 0.5 -> exact LCS computed
-    assert out[0] == -1, out
-    assert out[1] >= 40, out
+    # row 1: flag unset -> skipped; row 2: flag set, est 0.0 -> exact LCS
+    assert lcs[0] == -1, lcs
+    assert lcs[1] == -1, lcs
+    assert lcs[2] >= 40, lcs
+    assert out.field("est").to_pylist() == [1.0, 0.0, 0.0]
 
 
 def test_maintain_job_audio_axis_cross_batch(spark, cfg):

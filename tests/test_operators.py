@@ -117,12 +117,9 @@ def test_union_bitmask_packed_binary_ids_equal_legacy(spark):
         rows, "id1 string, id2 string, detector string")
     mkbin = lambda rows: mk(rows).select(  # noqa: E731
         F.unhex("id1").alias("id1"), F.unhex("id2").alias("id2"), "detector")
-    names = ["minhash", "simhash", "sa"]
     legacy = union_candidates(mk(rows1), mk(rows2), mk(rows3)).toPandas()
     packed = decode_mask_col(
-        union_candidates_bitmask(
-            [mkbin(rows1), mkbin(rows2), mkbin(rows3)], names),
-        names,
+        union_candidates_bitmask([mkbin(rows1), mkbin(rows2), mkbin(rows3)])
     ).toPandas()
     key = lambda df: {  # noqa: E731
         (r.id1, r.id2): list(r.detectors) for r in df.itertuples()

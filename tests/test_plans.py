@@ -100,7 +100,6 @@ def test_fused_text_verify_exchanges_each_feature_table_once(
     from locality_sensitive_hashing_spark.operators.verify import (
         text_verified_fused,
     )
-    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
     io, _, _ = pipeline_run
     confs = {"spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -111,7 +110,7 @@ def test_fused_text_verify_exchanges_each_feature_table_once(
     try:
         plan = _plan(text_verified_fused(
             io.read("candidates"), io.read("signatures"),
-            io.read("fingerprints"), cfg, names=TEXT_DETECTORS))
+            io.read("fingerprints"), cfg))
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
@@ -187,7 +186,6 @@ def test_pair_metrics_single_arrow_hop_hamming_jvm(spark, cfg):
     from locality_sensitive_hashing_spark.operators.verify import (
         text_verified_fused,
     )
-    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
     sigs = spark.createDataFrame(
         pd.DataFrame({"text_key": ["a", "b"], "norm": ["x y", "x z"],
@@ -201,8 +199,7 @@ def test_pair_metrics_single_arrow_hop_hamming_jvm(spark, cfg):
     )
     import re
 
-    plan = _plan(text_verified_fused(cands, sigs, fps, cfg,
-                                     names=TEXT_DETECTORS))
+    plan = _plan(text_verified_fused(cands, sigs, fps, cfg))
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
     assert "BatchEvalPython" not in plan, plan
     assert "bit_count" in plan, plan  # hamming stayed JVM

@@ -21,13 +21,12 @@ from locality_sensitive_hashing_spark.operators.verify import (
     text_verified_fused,
     text_verified_lookup,
 )
-from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
 COLS = ["tk1", "tk2", "detectors", "est_jaccard", "hamming", "lcs", "text_ok"]
 
 
 def _frame(df):
-    pdf = decode_mask_col(df, TEXT_DETECTORS).toPandas()
+    pdf = decode_mask_col(df).toPandas()
     pdf["detectors"] = pdf["detectors"].map(tuple)
     return pdf.sort_values(["tk1", "tk2"]).reset_index(drop=True)[COLS]
 
@@ -53,10 +52,9 @@ def three_paths(spark, pipeline_run, corpus, cfg):
     cands = io.read("candidates")
     lookup = _frame(text_verified_lookup(
         cands, io.data_path("signatures"), io.data_path("fingerprints"),
-        cfg, names=TEXT_DETECTORS))
+        cfg))
     fused = _frame(text_verified_fused(
-        cands, io.read("signatures"), io.read("fingerprints"), cfg,
-        names=TEXT_DETECTORS))
+        cands, io.read("signatures"), io.read("fingerprints"), cfg))
     return lookup, fused, oracle.text_verified
 
 
@@ -90,7 +88,7 @@ def test_lookup_plan_zero_joins_one_python_crossing(spark, pipeline_run, cfg):
     io, _, _ = pipeline_run
     plan = text_verified_lookup(
         io.read("candidates"), io.data_path("signatures"),
-        io.data_path("fingerprints"), cfg, names=TEXT_DETECTORS,
+        io.data_path("fingerprints"), cfg,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "Exchange" not in plan
@@ -100,12 +98,14 @@ def test_lookup_plan_zero_joins_one_python_crossing(spark, pipeline_run, cfg):
 
 def test_lookup_gate_falls_back_on_size(spark, pipeline_run, cfg,
                                         monkeypatch):
-    """SPARK_LSH_TEXT_LOOKUP_MAX_BYTES=0 disables the lookup path; the
-    pipeline then plans the fused join form (still one-pass)."""
+    """Feature tables above TEXT_LOOKUP_MAX_BYTES disable the lookup
+    path; the pipeline then plans the fused join form (still one-pass)."""
+    from locality_sensitive_hashing_spark.plans import pipeline as P
+
     io, pipe, _ = pipeline_run
-    monkeypatch.setenv("SPARK_LSH_TEXT_LOOKUP_MAX_BYTES", "0")
+    monkeypatch.setattr(P, "TEXT_LOOKUP_MAX_BYTES", 0)
     assert pipe._text_lookup_dirs() is None
-    monkeypatch.delenv("SPARK_LSH_TEXT_LOOKUP_MAX_BYTES")
+    monkeypatch.undo()
     assert pipe._text_lookup_dirs() is not None
 
 
@@ -120,7 +120,7 @@ def test_mask_schema_commit_decodes_to_identical_rows(spark, pipeline_run,
     assert "detectors_mask" in cand_raw.columns
     masked = text_verified_lookup(
         cand_raw, io.data_path("signatures"), io.data_path("fingerprints"),
-        cfg, names=TEXT_DETECTORS)
+        cfg)
     assert "detectors_mask" in masked.columns  # the commit-form schema
     cand = {(r.id1, r.id2): r.detectors_mask
             for r in cand_raw.toPandas().itertuples()}

@@ -67,11 +67,10 @@ def test_text_candidates_exact(pipeline_run, corpus):
     from locality_sensitive_hashing_spark.operators.candidates import (
         decode_mask_col,
     )
-    from locality_sensitive_hashing_spark.plans.pipeline import TEXT_DETECTORS
 
     # round 6: the stage commits the raw detector bitmask; the read-back
     # decode is the same pure mapping the pipeline applies
-    got = decode_mask_col(io.read("candidates"), TEXT_DETECTORS).toPandas()
+    got = decode_mask_col(io.read("candidates")).toPandas()
     assert _pair_set(got) == _pair_set(oracle.candidates)
     gd = {(r.id1, r.id2): list(r.detectors) for r in got.itertuples()}
     od = {(r.id1, r.id2): list(r.detectors) for r in oracle.candidates.itertuples()}
